@@ -14,14 +14,22 @@ an in-plan dimension, one window top-k — no driver round-trips.
 
 from __future__ import annotations
 
-from ..functions.localdf import local_df
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..functions.localdf import local_df
+from ..schemas import bronze_schema
 
 REQUEST_SIZES = (25, 40, 60)  # student counts, processing.scala:120-124
 TOP_K = 3
 W_CONTENT, W_COLLAB, W_AVAIL = 0.5, 0.3, 0.2  # processing.scala:110-115
 AVAIL_BOOKED, AVAIL_FREE = 0.5, 1.0  # processing.scala:106-109
+
+
+def _read_bronze(spark: SparkSession, bronze_dir: str, entity: str) -> DataFrame:
+    """One entity directory, read with the layout the router writes (no
+    schema inference); raises if the entity never arrived."""
+    return spark.read.schema(bronze_schema(entity)).parquet(f"{bronze_dir}/{entity}")
 
 
 def recommend_classrooms(
@@ -35,13 +43,13 @@ def recommend_classrooms(
     Inputs are the router's per-entity parquet dirs: ``classroom`` (capacity
     catalog) and ``fixed_booking`` / ``one_time_booking`` (usage events,
     reference processing.scala:57 unions them the same way)."""
-    classrooms = spark.read.parquet(f"{bronze_dir}/classroom").select(
+    classrooms = _read_bronze(spark, bronze_dir, "classroom").select(
         "classroom_id", F.col("capacity").cast("int").alias("capacity")
     )
     bookings = None
     for entity in ("fixed_booking", "one_time_booking"):
         try:
-            b = spark.read.parquet(f"{bronze_dir}/{entity}").select("classroom_id")
+            b = _read_bronze(spark, bronze_dir, entity).select("classroom_id")
         except Exception:  # entity never arrived on the stream
             continue
         bookings = b if bookings is None else bookings.unionByName(b)

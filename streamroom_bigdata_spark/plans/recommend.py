@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localdf import local_df
 from ..registry import register
+from ..sources import load_table
 
 REQUEST_SIZES = (10, 25, 40)
 TOP_K = 3
@@ -52,8 +53,8 @@ def recommend_rooms(
     request_sizes: tuple[int, ...] = REQUEST_SIZES,
     k: int = TOP_K,
 ) -> DataFrame:
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = load_table(spark, sf_dir, "part")
+    lineitem = load_table(spark, sf_dir, "lineitem")
 
     # ONE fact scan + ONE l_partkey shuffle computes BOTH per-room signals:
     # usage count (A1) and the booked flag (any returned booking) — the

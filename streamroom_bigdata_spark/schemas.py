@@ -7,8 +7,13 @@ Two families:
    field mappings; consumer.scala:20-41 wire union StructType). Dates/times are
    deliberately strings here for wire-parity; the typed bronze store adds real
    timestamps at ingest.
-2. **Fixture schemas** — the driver-generated TPC-H-ish tables under
-   /root/testdata (see FIXTURES.md §2), listed so readers never infer.
+2. **Fixture tables** — the generated TPC-H-ish tables (see
+   FIXTURES.md §2), listed by name only. Their schemas are not spelled out
+   here: ``sources.readers.load_table`` infers each table's schema once per
+   file version and session confs, then pins it on every later read.
+
+Bronze entity directories are read with :func:`bronze_schema`, the layout
+the streaming router writes, so live reads of the store infer nothing.
 """
 
 from __future__ import annotations
@@ -112,6 +117,16 @@ def wire_union_schema() -> T.StructType:
 
 
 WIRE_SCHEMA = wire_union_schema()
+
+
+def bronze_schema(entity: str) -> T.StructType:
+    """Layout of one bronze entity directory: the entity's fields with their
+    wire types, plus the ingest stamps. The router projects each micro-batch
+    to it and the domain queries read with it."""
+    names = [f.name for f in ENTITIES[entity][0].fields]
+    names += ["ingestion_timestamp", "ingestion_date"]
+    return T.StructType([WIRE_SCHEMA[n] for n in names])
+
 
 # ---------------------------------------------------------------------------
 # Fixture tables (/root/testdata/sf*/ — FIXTURES.md §2)

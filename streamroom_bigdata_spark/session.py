@@ -10,6 +10,8 @@ chosen so the same code is correct on a multi-executor cluster:
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
 - Arrow enabled for every pandas interchange (Pandas UDFs, toPandas).
+- Codegen cache sized to the working set, so warm queries reuse their
+  generated classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -19,6 +21,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: generated classes the codegen cache keeps. Spark's default of 100 is
+#: split into 4 segments of 25 that evict on their own, so four warm queries
+#: (~90 classes) already recompile classes on every run. The bench.py
+#: headline (sf0.1) plus the perfbench analytics mix compile 834 distinct
+#: classes; 2000 leaves each segment about 2.4x that share.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def cpu_count() -> int:
@@ -79,6 +87,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # bucketed tables (sources/bucketing.py) need a writable warehouse;
         # keep it out of the repo tree
         .config(

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .readers import load_table
+
 
 def _clear_stale_location(spark: SparkSession, table: str) -> None:
     """Remove an orphaned warehouse directory for ``table``.
@@ -72,7 +74,7 @@ def ensure_star_bucketed(
     li_tbl, ord_tbl = f"lineitem_bkt_{tok}", f"orders_bkt_{tok}"
     if not spark.catalog.tableExists(li_tbl):
         write_bucketed(
-            spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
+            load_table(spark, sf_dir, "lineitem"),
             li_tbl,
             "l_orderkey",
             n_buckets,
@@ -80,7 +82,7 @@ def ensure_star_bucketed(
         )
     if not spark.catalog.tableExists(ord_tbl):
         write_bucketed(
-            spark.read.parquet(f"{sf_dir}/orders.parquet"),
+            load_table(spark, sf_dir, "orders"),
             ord_tbl,
             "o_orderkey",
             n_buckets,

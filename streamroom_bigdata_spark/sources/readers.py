@@ -5,6 +5,18 @@ pushdown, column pruning and min/max skipping for free) and schema'd CSV for
 the SmartRoom ingest surface (reference: producer.scala:22-36 reads CSV
 line-wise on the driver; ours is a distributed `spark.read.csv`).
 
+Fixture tables go through one loader, :func:`load_table`, backed by a schema
+catalog: the first read of a table infers its schema from the parquet
+footer (one Spark job), and every later read of the same file version passes
+that schema to ``spark.read.schema(...)``, which submits no job. An entry is
+keyed on the path's absolute name, inode, size and mtime (plus those of every
+file under a directory) and on the session confs that change what Spark
+infers from a footer, so a pinned schema always equals what inference would
+return at that moment. The catalog holds schemas, never DataFrames: every
+call builds a fresh relation, so self-joins of one table keep distinct
+attributes. Paths ``os.stat`` cannot see (``hdfs://``, ``s3a://``,
+``file://`` URIs) are inferred on every read.
+
 Streaming: thin wrappers for file/rate/socket/kafka sources (reference:
 consumer.scala:44-49 Kafka source). Kafka needs the connector jar + a broker,
 neither of which exists in the test container, so it is exercised only via
@@ -13,14 +25,74 @@ option-building unit tests; the file and rate sources drive the real tests.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import FIXTURE_TABLES
 
+#: session confs that change the schema Spark infers from a parquet footer
+#: (or from a table directory's layout)
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: (absolute path, inference confs) -> (file fingerprint, inferred schema).
+#: Module-level: a schema depends only on the files and the confs, so it
+#: stays valid across ``spark.stop()`` and new contexts.
+_SCHEMAS: dict[tuple, tuple[tuple, T.StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """(inode, size, mtime_ns) of ``path`` and, for a directory, of every
+    entry under it; None when ``os.stat`` cannot see the path."""
+    try:
+        st = os.stat(path)
+    except OSError:  # a URI, or a missing path (Spark raises the error)
+        return None
+    out = [(".", st.st_ino, st.st_size, st.st_mtime_ns)]
+    if stat.S_ISDIR(st.st_mode):
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(root, name)
+                try:
+                    s = os.stat(full)
+                except OSError:  # removed while walking
+                    return None
+                out.append((os.path.relpath(full, path), s.st_ino, s.st_size, s.st_mtime_ns))
+    return tuple(out)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema pinned from the catalog
+    when this file version was read before under the same confs."""
+    fingerprint = _fingerprint(path)
+    if fingerprint is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return spark.read.schema(hit[1]).parquet(path)
+    # the fingerprint is taken before inference, so a file rewritten in
+    # between is re-inferred on the next read; racing misses both infer and
+    # store the same kind of pair, so no lock is needed
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fingerprint, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # The fixture events.ts is parquet TIMESTAMP(NANOS), which Spark's
         # reader rejects outright. Read nanos as int64 and convert to a
@@ -28,11 +100,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # ns→µs cast truncation, so oracle comparisons agree). Synthetic
         # events tables written with µs timestamps pass through untouched.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

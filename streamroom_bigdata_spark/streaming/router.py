@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..schemas import ENTITIES
+from ..schemas import ENTITIES, bronze_schema
 
 
 def route_batch(
@@ -71,11 +71,12 @@ def route_batch(
     try:
 
         def write_entity(item):
-            name, (schema, key) = item
+            name, (_, key) = item
+            # cast to the bronze layout, so readers can pin its schema (a
+            # no-op on the wire-parsed batch, whose types already match)
             entity = batch_df.filter(F.col("source_type") == name).select(
-                *[f.name for f in schema.fields],
-                "ingestion_timestamp",
-                "ingestion_date",
+                *[F.col(f.name).cast(f.dataType).alias(f.name)
+                  for f in bronze_schema(name).fields]
             )
             if dedup_within_batch:
                 entity = entity.dropDuplicates([key])
