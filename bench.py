@@ -14,9 +14,13 @@ growth is never conflated with plan cost).
 
 MEASUREMENT PROTOCOL (frozen — BASELINE.md §"protocol"):
   1. one fresh SparkSession; warm-up = 1 non-headline query + one count of
-     every fixture table + one trivial mapInPandas over every core + the
-     one-time bucketed-table write. Nothing in the headline set runs before
-     its measured run.
+     every fixture table + one trivial pandas-UDF pass over every core + the
+     one-time layout prep (bucketed tables, committed ANN index chain),
+     all in ``streamroom_bigdata_spark.instrument.Runner``. Nothing in the
+     headline set runs before its measured run. The chain is built for
+     any ``ann_index_*`` query but ``ann_index_probe_committed``, so in a
+     subset run the cold time of a chain-backed one (for example
+     ``ann_index_incremental``) excludes the chain build.
   2. each headline query then runs ONCE, cold (plan compile + execute) —
      that first-run number is ``queries``.
   3. the 5 slowest queries by cold time re-run 3 more times; the median is
@@ -38,7 +42,7 @@ like-for-like. The tier honors a wall-clock budget
 (``$SPARK_GRAFT_SF1_BUDGET_S``, default 900 s) — queries skipped when the
 budget is exhausted are listed, never silently dropped (guide §1).
 
-JOB COUNTS (round 16): per-query Spark job counts from the AppStatusStore
+JOB COUNTS (round 16): per-query counts of the jobs in each run's job group
 ride along in BENCH_SELF.json under ``jobs`` — the driver-visible artifact
 for plan-structure claims (e.g. "matvec once per round"); they are shed
 from the stdout line first, like ``rows``.
@@ -311,137 +315,46 @@ def main() -> int:
     # measured-run steal starts AFTER the pre-check window
     steal_start = _steal_jiffies()
 
-    from streamroom_bigdata_spark import registry
-    from streamroom_bigdata_spark.session import get_spark
+    from streamroom_bigdata_spark.instrument import Runner
 
-    spark = get_spark(
-        "bench",
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            # keep every job in the AppStatusStore so per-query job-count
-            # deltas stay exact across the whole run (default retention is
-            # 1000 jobs; a full bench submits more) — status-store
-            # bookkeeping only, no execution-path effect
-            "spark.ui.retainedJobs": "100000",
-        },
-    )
-    qs = registry.queries()
-
-    def n_jobs_so_far() -> int:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        return store.jobsList(
-            spark._jvm.java.util.Collections.emptyList()
-        ).size()
-
-    # Warm the JVM + parquet footers + Arrow/Python worker pool once so
-    # per-query numbers measure the query, not session startup. Neither
-    # warm-up query is in the headline set, so every headline number below is
-    # an equally cold first run (on warm workers, as on a long-lived cluster).
-    qs["global_stats"](spark, sf_dir).count()
-
-    # touch every fixture table once (parquet footers + page cache) so no
-    # headline query pays first-read IO that its peers don't
-    from streamroom_bigdata_spark.schemas import FIXTURE_TABLES
-    from streamroom_bigdata_spark.sources import load_table
-
-    for t in FIXTURE_TABLES:
-        load_table(spark, sf_dir, t).count()
-
-    # one trivial pandas-UDF pass over every core, so the per-core Python
-    # worker fork cost lands here instead of in the first pandas query
-    n_part = spark.sparkContext.defaultParallelism
-    spark.range(0, n_part * 10, 1, n_part).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-
-    # one-time bucketed-layout write (the ingest-time cost the bucketed
-    # star-join and SQL revenue-share variants trade their shuffle for) —
-    # layout prep, not query time
-    if "star_join_bucketed" in names or "sql_revenue_share" in names:
-        from streamroom_bigdata_spark.sources.bucketing import (
-            ensure_star_bucketed,
-        )
-
-        ensure_star_bucketed(spark, sf_dir)
-
-    # committed-ANN-index chain: a BUILD artifact, not query work — the
-    # probe-economics entries time the probe against an index that
-    # already exists (the production shape), so the one-time
-    # build+ingest chain is layout prep exactly like the bucketed write
-    if "ann_index_probe_only" in names or "ann_index_drift" in names:
-        from streamroom_bigdata_spark.operators.annindex import (
-            _incremental_chain,
-        )
-
-        _incremental_chain(spark, sf_dir)
-
-    # Per-query fault isolation: one broken query must never erase the
-    # round's entire performance signal — record its error and keep going.
-    # A query that OOMs the JVM kills the whole SparkContext (measured:
-    # one executor OOM at sf≈1 poisoned every later query with "stopped
-    # SparkContext"), so isolation must also REVIVE the session.
-    def ensure_alive():
-        nonlocal spark, qs
-        if not spark.sparkContext._jsc.sc().isStopped():
-            return
-        from streamroom_bigdata_spark.session import get_spark as _gs
-
-        # a context killed by an executor OOM is stopped but still
-        # REGISTERED as the instantiated session — getOrCreate would hand
-        # the corpse back (measured at the sf≈10 rehearsal: every query
-        # after the OOM failed with "stopped SparkContext"); stop() clears
-        # the registration so the rebuild is genuinely fresh
-        try:
-            spark.stop()
-        except Exception:  # noqa: BLE001
-            pass
-        spark = _gs(
-            "bench-revived",
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
-        qs = registry.queries()
-        if "star_join_bucketed" in names or "sql_revenue_share" in names:
-            from streamroom_bigdata_spark.sources.bucketing import (
-                ensure_star_bucketed,
-            )
-
-            ensure_star_bucketed(spark, sf_dir)
-        if "ann_index_probe_only" in names or "ann_index_drift" in names:
-            from streamroom_bigdata_spark.operators.annindex import (
-                _incremental_chain,
-            )
-
-            _incremental_chain(spark, sf_dir)
+    # Warm-up and layout prep (instrument.Runner): nothing in the headline
+    # set runs before its measured run, so every headline number below is
+    # an equally cold first run (on warm workers, as on a long-lived
+    # cluster). A query that OOMs the JVM stops the SparkContext; the
+    # runner revives it before the next run, so one broken query never
+    # erases the run's performance signal.
+    runner = Runner(sf_dir, names)
 
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
     errors: dict[str, str] = {}
     jobs: dict[str, int] = {}
+
+    def run_cold(name: str, key: str, run_dir: str | None = None) -> None:
+        r = runner.run(name, sf_dir=run_dir)
+        if r.error is not None:
+            errors[key] = f"{type(r.error).__name__}: {r.error}"[:400]
+            return
+        rows[key] = r.rows
+        timings[key] = round(r.wall_s, 3)
+        jobs[key] = r.jobs
+
     for name in names:
-        ensure_alive()
-        j0 = n_jobs_so_far()
-        t0 = time.perf_counter()
-        try:
-            rows[name] = qs[name](spark, sf_dir).count()
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {exc}"[:400]
-            continue
-        timings[name] = round(time.perf_counter() - t0, 3)
-        jobs[name] = n_jobs_so_far() - j0
+        run_cold(name, name)
 
     warm: dict[str, float] = {}
     for name in sorted(timings, key=timings.get, reverse=True)[:WARM_TOP_N]:
-        ensure_alive()
         runs = []
-        try:
-            for _ in range(WARM_RUNS):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).count()
-                runs.append(time.perf_counter() - t0)
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"warm: {type(exc).__name__}: {exc}"[:400]
-            continue
-        warm[name] = round(statistics.median(runs), 3)
+        for _ in range(WARM_RUNS):
+            r = runner.run(name)
+            if r.error is not None:
+                errors[name] = (
+                    f"warm: {type(r.error).__name__}: {r.error}"[:400]
+                )
+                break
+            runs.append(r.wall_s)
+        else:
+            warm[name] = round(statistics.median(runs), 3)
 
     # ------------------------------------------------------------------
     # Data-sized tier (module docstring): SF1_TIER cold single-shots at a
@@ -467,32 +380,19 @@ def main() -> int:
             sf1_dir = None
             sf1_info["synth_error"] = f"{type(exc).__name__}: {exc}"[:300]
         if sf1_dir:
-            ensure_alive()
             # footer/page-cache warm-up for the tier's tables, mirroring
             # the headline warm-up, so the first tier query isn't charged
             # first-read IO its peers skip
-            for t in FIXTURE_TABLES:
-                try:
-                    load_table(spark, sf1_dir, t).count()
-                except Exception:  # noqa: BLE001
-                    break
+            try:
+                runner.touch_tables(sf1_dir)
+            except Exception:  # noqa: BLE001
+                pass
             skipped: list[str] = []
             for name in SF1_TIER:
                 if time.perf_counter() - tier_t0 > budget_s:
                     skipped.append(name)
                     continue
-                ensure_alive()
-                j0 = n_jobs_so_far()
-                t0 = time.perf_counter()
-                try:
-                    rows[f"sf1:{name}"] = qs[name](spark, sf1_dir).count()
-                except Exception as exc:  # noqa: BLE001
-                    errors[f"sf1:{name}"] = (
-                        f"{type(exc).__name__}: {exc}"[:400]
-                    )
-                    continue
-                timings[f"sf1:{name}"] = round(time.perf_counter() - t0, 3)
-                jobs[f"sf1:{name}"] = n_jobs_so_far() - j0
+                run_cold(name, f"sf1:{name}", sf1_dir)
             sf1_total = round(
                 sum(v for k, v in timings.items() if k.startswith("sf1:")), 3
             )
@@ -505,8 +405,7 @@ def main() -> int:
             if skipped:
                 sf1_info["skipped_budget"] = skipped
 
-    m = re.match(r"sf([0-9.]+)", os.path.basename(sf_dir.rstrip("/")))
-    sf = float(m.group(1)) if m else 1.0
+    sf = float(m0.group(1)) if m0 else 1.0
     load_end = os.getloadavg()
     out = {
         "metric": "headline_queries_total",

@@ -237,24 +237,34 @@ def ks_two_sample_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day order revenue + count: day index = floor(epoch days) of
-    o_orderdate. One combinable groupBy on the day domain — the relation
-    is bounded by the corpus calendar span at ANY data scale.
+def _daily_orders(od: DataFrame, cents: bool = False) -> DataFrame:
+    """The day-DOMAIN table of the ``orders`` table ``od``: per-day order
+    revenue, as the double sum ``rev`` or, with ``cents``, in exact integer
+    cents ``rev_c`` (never both: the cents cost a HALF_UP round per order
+    row), plus ``n_orders``; day index = floor(epoch days) of o_orderdate.
+    One combinable groupBy on the day domain — bounded by the corpus
+    calendar span at ANY data scale. Each consumer loads ``od`` through its
+    own module's ``load_table``.
 
     Materialized ONCE via localCheckpoint (round 16; guide §2.4): every
-    consumer (theil_sen, acf, spearman, ljung_box, dow bands) reads the
-    day table 2-5 times, and without the barrier each read re-ran the
-    data-sized orders scan + day aggregate. ≤ span rows of flat numerics
-    — the barrier is trivially small next to the scans it removes."""
-    od = load_table(spark, sf_dir, "orders")
-    d = F.floor(epoch_ms(F.col("o_orderdate").cast("timestamp")) / 86400000).alias(
-        "d"
-    )
+    consumer (theil_sen, acf, spearman, ljung_box, dow bands, the quant
+    module's rank and pair statistics) reads the day table 2-5 times, and
+    without the barrier each read re-ran the data-sized orders scan + day
+    aggregate. ≤ span rows of flat numerics — the barrier is trivially
+    small next to the scans it removes. Small sides stay explicitly
+    F.broadcast at the call sites, so the erased statistics never gate a
+    needed broadcast."""
+    v, rev = ("c", "rev_c") if cents else ("o_totalprice", "rev")
+    c = F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")
     return (
-        od.select(d, "o_totalprice")
+        od.select(
+            F.floor(epoch_ms(F.col("o_orderdate").cast("timestamp")) / 86400000)
+            .cast("bigint")
+            .alias("d"),
+            c if cents else v,
+        )
         .groupBy("d")
-        .agg(F.sum("o_totalprice").alias("rev"), F.count("*").alias("n_orders"))
+        .agg(F.sum(v).alias(rev), F.count("*").alias("n_orders"))
         .localCheckpoint()
     )
 
@@ -308,7 +318,7 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = shuffle_partition_count(spark)
     # the day-DOMAIN table is materialized once inside _daily_orders
     # (three consumers here: both pair sides + the n_days scalar)
-    daily = _daily_orders(spark, sf_dir).select("d", "rev")
+    daily = _daily_orders(load_table(spark, sf_dir, "orders")).select("d", "rev")
     a = daily.repartition(n_parts).select(
         F.col("d").alias("d1"), F.col("rev").alias("r1")
     )
@@ -372,7 +382,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join is an equi-join on day, and the global mean/SS cross as a
     1-row broadcast (in-plan scalar pattern). acf is a ratio of centered
     sums — accumulation-order noise cancels, round-6 stable."""
-    daily = _daily_orders(spark, sf_dir).select("d", "rev")
+    daily = _daily_orders(load_table(spark, sf_dir, "orders")).select("d", "rev")
     # centered SS needs the mean first: two-pass via 1-row broadcast
     mu = daily.agg(F.avg("rev").alias("mu"))
     centered = daily.crossJoin(F.broadcast(mu)).select(
@@ -434,7 +444,7 @@ def spearman_daily_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily groupBy. Average ranks are multiples of 0.5 below 2^52, so the
     rank vectors are bit-identical cross-engine; rho is a ratio of
     centered sums (round-6 stable)."""
-    daily = _daily_orders(spark, sf_dir)
+    daily = _daily_orders(load_table(spark, sf_dir, "orders"))
     w_rev = Window.orderBy("rev")
     w_cnt = Window.orderBy("n_orders")
     ranked = daily.select(
@@ -1298,7 +1308,7 @@ def ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowlisted bounded-window class)."""
     from pyspark.sql import Window
 
-    daily = _daily_orders(spark, sf_dir).select("d", "rev")
+    daily = _daily_orders(load_table(spark, sf_dir, "orders")).select("d", "rev")
     nn = daily.agg(F.count("*").alias("n"))
     mu = daily.agg(F.avg("rev").alias("mu"))
     centered = daily.crossJoin(F.broadcast(mu)).select(
@@ -1383,7 +1393,7 @@ def dow_quantile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one combinable daily groupBy, then a 7-group percentile
     sketch — nothing larger than the day domain moves."""
-    daily = _daily_orders(spark, sf_dir).select("d", "rev")
+    daily = _daily_orders(load_table(spark, sf_dir, "orders")).select("d", "rev")
     grid = F.array(*[F.lit(q) for q in DOW_QS])
     g = daily.groupBy(
         F.pmod(F.col("d") + 3, F.lit(7)).cast("int").alias("day_of_week")

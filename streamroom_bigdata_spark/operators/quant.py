@@ -35,13 +35,14 @@ from ..functions.localdf import local_df
 from ..registry import register
 from ..session import shuffle_partition_count
 from ..sources import load_table
+from .distribution import _daily_orders
 
 # ---------------------------------------------------------------------------
 # Shared day-keyed relations (exact integer cents)
 # ---------------------------------------------------------------------------
 
-#: daily order revenue in exact cents + order count — the integer-exact
-#: twin of distribution._daily_orders (which keeps float revenue)
+#: DuckDB twin of the day-DOMAIN table in cents
+#: (distribution._daily_orders)
 _DAILY_CENTS_SQL = """
   SELECT CAST(floor(epoch_ms(CAST(o_orderdate AS TIMESTAMP)) / 86400000.0)
               AS BIGINT) AS d,
@@ -52,27 +53,8 @@ _DAILY_CENTS_SQL = """
 
 
 def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day exact-cents revenue + order count, materialized ONCE via
-    localCheckpoint (round 16; guide §2.4): every consumer query in this
-    module reads the day table 2-5 times (pair sides, scalar aggs, tie
-    groupBys), and Spark shares no common subexpressions — each consumer
-    was re-running the data-sized orders scan + day aggregate. The
-    materialized relation is calendar-bounded (≤ span rows, 3 ints/row) at
-    ANY corpus scale, so the barrier is trivially small next to the scans
-    it removes. Small sides stay explicitly F.broadcast at the call sites,
-    so the erased statistics never gate a needed broadcast."""
-    od = load_table(spark, sf_dir, "orders")
-    return (
-        od.select(
-            F.floor(epoch_ms(F.col("o_orderdate").cast("timestamp")) / 86400000)
-            .cast("bigint")
-            .alias("d"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
-        )
-        .groupBy("d")
-        .agg(F.sum("c").alias("rev_c"), F.count("*").alias("n_orders"))
-        .localCheckpoint()
-    )
+    """The day-DOMAIN table in cents, read via this module's load_table."""
+    return _daily_orders(load_table(spark, sf_dir, "orders"), cents=True)
 
 
 def _day_pairs(daily: DataFrame, n_parts: int, cols: list[str]) -> DataFrame:

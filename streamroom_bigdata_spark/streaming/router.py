@@ -31,7 +31,6 @@ from ..schemas import ENTITIES, bronze_schema
 def route_batch(
     batch_df: DataFrame,
     base_dir: str,
-    dedup_within_batch: bool = True,
     single_pass: bool = False,
     batch_id: int | None = None,
 ) -> None:
@@ -77,9 +76,7 @@ def route_batch(
             entity = batch_df.filter(F.col("source_type") == name).select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name)
                   for f in bronze_schema(name).fields]
-            )
-            if dedup_within_batch:
-                entity = entity.dropDuplicates([key])
+            ).dropDuplicates([key])
             if batch_id is None:
                 entity.write.mode("append").parquet(os.path.join(base_dir, name))
             else:

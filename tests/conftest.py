@@ -87,10 +87,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=8, extra_conf={
-        "spark.ui.showConsoleProgress": "false",
-    })
-    yield s
+    yield get_spark("tests", shuffle_partitions=8)
 
 
 @pytest.fixture(scope="session")

@@ -481,7 +481,7 @@ def test_ljung_box_consistent_with_acf(spark, sf_dir):
         distribution.ljung_box_q(spark, sf_dir).collect(),
         key=lambda r: r.lag,
     )
-    n = distribution._daily_orders(spark, sf_dir).count()
+    n = distribution._daily_orders(load_table(spark, sf_dir, "orders")).count()
     q = 0.0
     for r in lb:
         q += n * (n + 2.0) * r.acf**2 / (n - r.lag)

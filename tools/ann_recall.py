@@ -37,9 +37,7 @@ def main() -> int:
     from streamroom_bigdata_spark.operators import similarity as sim
     from streamroom_bigdata_spark.session import get_spark
 
-    spark = get_spark(
-        "ann_recall", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("ann_recall")
     # pre-fork python workers so the first pandas query isn't charged fork cost
     spark.range(64 * 1024, numPartitions=64).selectExpr("sum(id)").collect()
 

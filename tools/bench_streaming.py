@@ -96,7 +96,6 @@ def stateful_main() -> int:
     spark = get_spark(
         "bench_streaming_stateful",
         extra_conf={
-            "spark.ui.showConsoleProgress": "false",
             "spark.sql.streaming.numRecentProgressUpdates": "100000",
         },
     )
@@ -203,7 +202,6 @@ def annprobe_main() -> int:
     spark = get_spark(
         "bench_streaming_annprobe",
         extra_conf={
-            "spark.ui.showConsoleProgress": "false",
             "spark.sql.streaming.numRecentProgressUpdates": "100000",
         },
     )
@@ -268,7 +266,6 @@ def main() -> int:
     spark = get_spark(
         "bench_streaming",
         extra_conf={
-            "spark.ui.showConsoleProgress": "false",
             # recentProgress retains only the last N updates (default 100);
             # a long run with small batches would silently truncate the
             # throughput numerator AND denominator — keep every batch

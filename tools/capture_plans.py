@@ -27,9 +27,7 @@ def main() -> int:
     from streamroom_bigdata_spark import registry
     from streamroom_bigdata_spark.session import get_spark
 
-    spark = get_spark(
-        "capture_plans", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("capture_plans")
     qs = registry.queries()
     for name in names:
         df = qs[name](spark, sf_dir)

@@ -4,7 +4,9 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 over the same sf directory, then compares row count, sorted column names, and
 an order-insensitive value hash (doubles rounded to 6 significant-ish
 decimals before hashing, so float noise below the round threshold doesn't
-flip the gate).
+flip the gate). The Spark side runs through
+``streamroom_bigdata_spark.instrument.Runner`` (bench.py's warm-up, layout
+prep and session revive).
 
 Usage:
     python tools/check_oracle.py [sf_dir] [query ...] [--json FILE]
@@ -19,6 +21,7 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 import time
 import traceback
@@ -26,19 +29,6 @@ import traceback
 import duckdb
 
 sys.path.insert(0, ".")
-
-_args = sys.argv[1:]
-JSON_OUT = None
-if "--json" in _args:
-    i = _args.index("--json")
-    JSON_OUT = _args[i + 1]
-    _args = _args[:i] + _args[i + 2 :]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.01"
-ONLY = set(_args[1:])
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def norm(v) -> str:
@@ -70,25 +60,30 @@ def value_hash(rows, colnames) -> str:
 
 
 def main() -> int:
-    from streamroom_bigdata_spark.session import get_spark
     from streamroom_bigdata_spark import registry
+    from streamroom_bigdata_spark.instrument import Runner
+    from streamroom_bigdata_spark.schemas import FIXTURE_TABLES
 
-    spark = get_spark(
-        "check_oracle",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    args = sys.argv[1:]
+    json_out = None
+    if "--json" in args:
+        i = args.index("--json")
+        json_out = args[i + 1]
+        args = args[:i] + args[i + 2 :]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    only = set(args[1:])
+
     con = duckdb.connect()
-    import os
-
-    for t in TABLES:
-        path = f"{SF_DIR}/{t}.parquet"
+    for t in FIXTURE_TABLES:
+        path = f"{sf_dir}/{t}.parquet"
         # Spark-written tables (e.g. the synthetic sf≈1 fixtures) are
         # DIRECTORIES of part files; DuckDB needs the glob form for those
         if os.path.isdir(path):
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    qs = registry.queries()
+    names = sorted(n for n in registry.queries() if not only or n in only)
+    runner = Runner(sf_dir, names)
     oracles = registry.oracle_sql()
     failures = []
     results: dict[str, dict] = {}
@@ -103,20 +98,18 @@ def main() -> int:
             "err": err,
         }
 
-    for name, fn in sorted(qs.items()):
-        if ONLY and name not in ONLY:
-            continue
+    for name in names:
         t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception:
+        r = runner.run(name, action="collect")
+        if r.error is not None:
+            tb = "".join(traceback.format_exception(r.error))
             print(f"FAIL  {name}: spark error")
-            traceback.print_exc()
+            print(tb, end="", file=sys.stderr)
             failures.append(name)
-            record(name, err="spark: " + traceback.format_exc()[-400:])
+            record(name, err="spark: " + tb[-400:])
             continue
+        scols = r.columns
+        srows = [tuple(row) for row in r.collected]
         if name not in oracles:
             print(f"rows-only  {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
             record(name, rows=len(srows))
@@ -172,10 +165,10 @@ def main() -> int:
         else:
             print(f"OK    {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    if JSON_OUT:
-        with open(JSON_OUT, "w") as f:
+    if json_out:
+        with open(json_out, "w") as f:
             json.dump(results, f, indent=2)
-        print(f"wrote {JSON_OUT}")
+        print(f"wrote {json_out}")
     return 1 if failures else 0
 
 

@@ -57,9 +57,7 @@ def main() -> int:
     from streamroom_bigdata_spark.session import get_spark
     from streamroom_bigdata_spark.sources import load_table
 
-    spark = get_spark(
-        "make_scale", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("make_scale")
 
     # per-table: columns to shift by copy_index * KEY_OFFSET
     shifts = {

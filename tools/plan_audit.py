@@ -197,9 +197,7 @@ def main() -> int:
     from streamroom_bigdata_spark import registry
     from streamroom_bigdata_spark.session import get_spark
 
-    spark = get_spark(
-        "plan_audit", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("plan_audit")
     lines = [HEADER]
     violations: list[str] = []
     for name, fn in sorted(registry.queries().items()):

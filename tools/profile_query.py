@@ -3,19 +3,20 @@
 Usage:
     python tools/profile_query.py <query> [sf_dir] [--runs N]
 
-Runs the query once cold and N−1 more times warm, then dumps every Spark
-job the run submitted — duration, stage count, task count, description —
-from the in-memory AppStatusStore (works with the UI disabled). This is
-the local-mode stand-in for the Spark UI jobs page: it attributes a
-query's wall-clock to its constituent jobs (collects, localCheckpoints,
-iterative rounds, the final count) so optimization targets the right
-stage instead of guessing.
+Runs the query once cold and N−1 more times warm through
+``streamroom_bigdata_spark.instrument.Runner`` (bench.py's warm-up and
+layout prep), then dumps every Spark job the run submitted — duration,
+stage count, task count, description, and whether it ran while the
+DataFrame was being built — from the in-memory AppStatusStore (works with
+the UI disabled). This is the local-mode stand-in for the Spark UI jobs
+page: it attributes a query's wall-clock to its constituent jobs
+(collects, localCheckpoints, iterative rounds, the final count) so
+optimization targets the right stage instead of guessing.
 """
 
 from __future__ import annotations
 
 import sys
-import time
 
 sys.path.insert(0, ".")
 
@@ -43,85 +44,33 @@ def main() -> int:
     else:
         sf_dir, names = "/root/testdata/sf0.1", args
 
-    from streamroom_bigdata_spark import registry
-    from streamroom_bigdata_spark.session import get_spark
-    from streamroom_bigdata_spark.schemas import FIXTURE_TABLES
-    from streamroom_bigdata_spark.sources import load_table
+    from streamroom_bigdata_spark.instrument import Runner
 
-    spark = get_spark(
-        "profile", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    qs = registry.queries()
-
-    # bench.py's warm-up: footers + python worker pool, so the cold run
-    # below measures the query, not session startup
-    qs["global_stats"](spark, sf_dir).count()
-    for t in FIXTURE_TABLES:
-        load_table(spark, sf_dir, t).count()
-    n_part = spark.sparkContext.defaultParallelism
-    spark.range(0, n_part * 10, 1, n_part).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    if any(
-        n.startswith("ann_index_") and n != "ann_index_probe_committed"
-        for n in names
-    ):
-        from streamroom_bigdata_spark.operators.annindex import (
-            _incremental_chain,
-        )
-
-        _incremental_chain(spark, sf_dir)
-
-    store = spark.sparkContext._jsc.sc().statusStore()
-
-    def job_rows():
-        it = store.jobsList(
-            spark._jvm.java.util.Collections.emptyList()
-        ).iterator()
-        out = []
-        while it.hasNext():
-            j = it.next()
-            sub = j.submissionTime()
-            comp = j.completionTime()
-            t0 = sub.get().getTime() if sub.isDefined() else None
-            t1 = comp.get().getTime() if comp.isDefined() else None
-            out.append(
-                {
-                    "id": j.jobId(),
-                    "t0": t0,
-                    "dur_ms": (t1 - t0) if (t0 and t1) else None,
-                    "stages": j.stageIds().size(),
-                    "tasks": j.numTasks(),
-                    "desc": (j.description().get() if j.description().isDefined() else j.name())[:110],
-                }
-            )
-        return {r["id"]: r for r in out}
-
+    runner = Runner(sf_dir, names)
     for name in names:
-      for i in range(runs):
-        before = job_rows()
-        label = "cold" if i == 0 else f"warm{i}"
-        t0 = time.perf_counter()
-        n = qs[name](spark, sf_dir).count()
-        wall = time.perf_counter() - t0
-        after = job_rows()
-        new = [r for jid, r in sorted(after.items()) if jid not in before]
-        print(f"\n=== {name} {label}: {wall:.3f}s total, {n} rows, "
-              f"{len(new)} jobs, job-sum "
-              f"{sum(r['dur_ms'] or 0 for r in new)/1000:.3f}s ===")
-        prev_end = None
-        for r in new:
-            gap = ""
-            if prev_end is not None and r["t0"] is not None:
-                g = (r["t0"] - prev_end) / 1000.0
-                if g > 0.05:
-                    gap = f"  (+{g:.2f}s gap before)"
-            if r["t0"] is not None and r["dur_ms"] is not None:
-                prev_end = r["t0"] + r["dur_ms"]
-            print(
-                f"  job {r['id']:>4}  {(r['dur_ms'] or 0)/1000:7.3f}s  "
-                f"stages={r['stages']:<2} tasks={r['tasks']:<4} {r['desc']}{gap}"
-            )
+        for i in range(runs):
+            r = runner.run(name)
+            if r.error is not None:
+                raise r.error
+            label = "cold" if i == 0 else f"warm{i}"
+            print(f"\n=== {name} {label}: {r.wall_s:.3f}s total "
+                  f"(build {r.build_s:.3f}s, {r.build_jobs} jobs), {r.rows} rows, "
+                  f"{r.jobs} jobs, job-sum "
+                  f"{sum(j['dur_ms'] or 0 for j in r.job_rows)/1000:.3f}s ===")
+            prev_end = None
+            for j in r.job_rows:
+                gap = ""
+                if prev_end is not None and j["t0"] is not None:
+                    g = (j["t0"] - prev_end) / 1000.0
+                    if g > 0.05:
+                        gap = f"  (+{g:.2f}s gap before)"
+                if j["t0"] is not None and j["dur_ms"] is not None:
+                    prev_end = j["t0"] + j["dur_ms"]
+                print(
+                    f"  job {j['id']:>4}  {(j['dur_ms'] or 0)/1000:7.3f}s  "
+                    f"stages={j['stages']:<2} tasks={j['tasks']:<4} "
+                    f"{'build ' if j['build'] else ''}{j['desc']}{gap}"
+                )
     return 0
 
 

@@ -4,7 +4,10 @@ PLANS.md counts exchanges statically; this tool runs each headline query
 (sf0.1 by default) and reads the AQE-final executed plan's SQL metrics —
 actual shuffle bytes/records written, broadcast sizes, and rows scanned.
 The number that matters at 100 TB is bytes-through-the-shuffle per query,
-and it is measured here, not inferred.
+and it is measured here, not inferred. Queries run through
+``streamroom_bigdata_spark.instrument.Runner``; only the final action's
+plan is read, so shuffles in the eager jobs a query submits while it is
+being built are not counted.
 
 Usage:
     python tools/shuffle_audit.py [sf_dir] [query ...] [--write] [--json OUT]
@@ -20,17 +23,6 @@ import json
 import sys
 
 sys.path.insert(0, ".")
-
-WRITE = "--write" in sys.argv
-JSON_OUT = None
-_argv = sys.argv[1:]
-if "--json" in _argv:
-    i = _argv.index("--json")
-    JSON_OUT = _argv[i + 1]
-    _argv = _argv[:i] + _argv[i + 2 :]
-_pos = [a for a in _argv if not a.startswith("-")]
-SF_DIR = _pos[0] if _pos else "/root/testdata/sf0.1"
-ONLY = _pos[1:]  # optional query subset (default: bench HEADLINE)
 
 # Regression tolerances (per query, same sf): generous enough that AQE
 # partition-count jitter and stats-estimate drift never trip them, tight
@@ -129,34 +121,39 @@ def _walk(node, acc) -> None:
 def main() -> int:
     from bench import HEADLINE
 
-    from streamroom_bigdata_spark import registry
-    from streamroom_bigdata_spark.session import get_spark
+    from streamroom_bigdata_spark.instrument import Runner
 
-    spark = get_spark(
-        "shuffle_audit", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    qs = registry.queries()
+    argv = sys.argv[1:]
+    write = "--write" in argv
+    json_out = None
+    if "--json" in argv:
+        i = argv.index("--json")
+        json_out = argv[i + 1]
+        argv = argv[:i] + argv[i + 2 :]
+    pos = [a for a in argv if not a.startswith("-")]
+    sf_dir = pos[0] if pos else "/root/testdata/sf0.1"
+    names = pos[1:] or HEADLINE
+
+    runner = Runner(sf_dir, names)
     lines = [HEADER]
     books: dict[str, dict] = {}
-    for name in (ONLY or HEADLINE):
-        df = qs[name](spark, SF_DIR)
-        df.collect()
-        root = df._jdf.queryExecution().executedPlan()
+    for name in names:
+        r = runner.run(name, action="collect")
+        if r.error is not None:
+            raise r.error
+        root = r.df._jdf.queryExecution().executedPlan()
         # unwrap AdaptiveSparkPlanExec to the final, metric-bearing plan
         final = (
             root.executedPlan()
             if root.nodeName() == "AdaptiveSparkPlan"
             else root
         )
-        acc = {
-            "shuffles": 0,
-            "shuffle_bytes": 0,
-            "shuffle_rows": 0,
-            "broadcast_bytes": 0,
-            "scan_rows": 0,
-        }
+        acc = dict.fromkeys(
+            ("shuffles", "shuffle_bytes", "shuffle_rows", "broadcast_bytes",
+             "scan_rows"), 0
+        )
         _walk(final, acc)
-        books[name] = {
+        books[name] = b = {
             "shuffles": acc["shuffles"],
             "shuffle_mib": round(acc["shuffle_bytes"] / 1048576, 3),
             "shuffle_rows": acc["shuffle_rows"],
@@ -164,26 +161,21 @@ def main() -> int:
             "scan_rows": acc["scan_rows"],
         }
         lines.append(
-            "| {} | {} | {:.2f} | {:,} | {:.2f} | {:,} |".format(
-                name,
-                acc["shuffles"],
-                acc["shuffle_bytes"] / 1048576,
-                acc["shuffle_rows"],
-                acc["broadcast_bytes"] / 1048576,
-                acc["scan_rows"],
-            )
+            f"| {name} | {b['shuffles']} | {b['shuffle_mib']:.2f} | "
+            f"{b['shuffle_rows']:,} | {b['broadcast_mib']:.2f} | "
+            f"{b['scan_rows']:,} |"
         )
     table = "\n".join(lines)
-    if JSON_OUT:
-        with open(JSON_OUT, "w") as f:
-            json.dump({"sf_dir": SF_DIR, "queries": books}, f, indent=1,
+    if json_out:
+        with open(json_out, "w") as f:
+            json.dump({"sf_dir": sf_dir, "queries": books}, f, indent=1,
                       sort_keys=True)
-        print(f"wrote {JSON_OUT} ({len(books)} queries)")
-    if WRITE:
+        print(f"wrote {json_out} ({len(books)} queries)")
+    if write:
         with open("SHUFFLES.md", "w") as f:
             f.write(
                 "# Measured shuffle audit (tools/shuffle_audit.py at "
-                f"{SF_DIR})\n\n"
+                f"{sf_dir})\n\n"
                 "Executed-plan SQL metrics per headline query — actual "
                 "bytes/records through each shuffle and broadcast, after "
                 "AQE's final re-plan. Complements PLANS.md (static "

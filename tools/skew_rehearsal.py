@@ -112,7 +112,6 @@ def main() -> int:
     spark = get_spark(
         "skew_rehearsal",
         extra_conf={
-            "spark.ui.showConsoleProgress": "false",
             # the REST status API rides on the UI (off by default in
             # session.py)
             "spark.ui.enabled": "true",
