@@ -25,6 +25,9 @@ MEASUREMENT PROTOCOL (frozen — BASELINE.md §"protocol"):
      that first-run number is ``queries``.
   3. the 5 slowest queries by cold time re-run 3 more times; the median is
      reported under ``warm_top5``.
+The runner unpersists what each run persisted, so a warm median does not
+re-use the query's own leftover caches and no cold run re-uses an earlier
+query's.
 Cold single-shot numbers at this scale carry ±20-30 % variance; compare
 round-over-round via warm medians first, cold totals second.
 

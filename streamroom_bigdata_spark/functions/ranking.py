@@ -9,11 +9,12 @@ and prefix-summed into per-partition offsets broadcast back; global rank =
 offset + local rank. Consolidated here so the pid-pinning rationale lives
 in ONE place:
 
-- ``localCheckpoint`` (not persist) TRULY pins the pid assignment across
-  the two consumers of the ranged frame — a cached partition lost to
-  executor failure would be re-range-sampled AFTER the offsets were
-  collected, silently skewing every global rank; a lost checkpoint
-  partition fails loudly instead.
+- a checkpoint (``materialize``, not persist) TRULY pins the pid
+  assignment across the two consumers of the ranged frame — a cached
+  partition lost to executor failure would be re-range-sampled AFTER the
+  offsets were collected, silently skewing every global rank; a lost
+  local-checkpoint partition fails loudly instead, and a reliable one is
+  read back as written.
 - equal sort-key values land in one range partition, so tie groups are
   never split across offsets (the property the tie-averaged rank sums and
   exact CDF evaluations above rely on).
@@ -22,6 +23,7 @@ in ONE place:
 from __future__ import annotations
 
 from .localdf import local_df
+from .reliability import materialize
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,7 +39,7 @@ def range_partition_offsets(
 
     Returns ``(ranged, rows, offsets_df, totals)``:
 
-    - ``ranged``: the pid-pinned (localCheckpoint) range-partitioned frame
+    - ``ranged``: the pid-pinned (checkpointed) range-partitioned frame
       with a ``pid`` column — rank locally within it via
       ``Window.partitionBy("pid")``;
     - ``rows``: the collected per-pid aggregate rows, sorted by pid (O(P)),
@@ -51,7 +53,7 @@ def range_partition_offsets(
     ranged = (
         df.repartitionByRange(n_parts, *sort_cols)
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(materialize)
     )
     rows = sorted(
         ranged.groupBy("pid").agg(*[a.alias(n) for n, a in aggs]).collect(),

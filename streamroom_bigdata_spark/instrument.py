@@ -9,8 +9,10 @@ bucketed star tables; the committed ANN index chain, which every
 ``ann_index_*`` query except ``ann_index_probe_committed`` probes), and
 revives a SparkContext that a JVM OOM stopped. Each run builds one query
 and ends it with a ``count`` or ``collect``, under a job group unique to
-the run, and returns one :class:`QueryRun`. A failed layout prep or
-revive is the recorded error of each run that needs it.
+the run, and returns one :class:`QueryRun`. Every RDD a run persists
+(the query's checkpoints) is unpersisted when the run ends, so no run
+sees an earlier run's storage. A failed layout prep or revive is the
+recorded error of each run that needs it.
 """
 
 from __future__ import annotations
@@ -57,6 +59,8 @@ class QueryRun:
     rows: int | None = None
     columns: list[str] | None = None
     collected: list | None = None  # ``collect`` action only
+    # its materializations are released when the run ends: read its plan
+    # and schema, but do not execute it again
     df: DataFrame | None = None
     error: Exception | None = None
 
@@ -131,6 +135,7 @@ class Runner:
         if rec.error is not None:
             return rec
         sc = self.spark.sparkContext
+        kept = set(sc._jsc.getPersistentRDDs().keySet())
         group = f"{name}#{next(self._groups)}"
         parent = sc.getLocalProperty(_GROUP)
         sc.setLocalProperty(_GROUP, group)
@@ -151,6 +156,10 @@ class Runner:
             return rec
         finally:
             sc.setLocalProperty(_GROUP, parent)
+            if not sc._jsc.sc().isStopped():
+                for rid, rdd in sc._jsc.getPersistentRDDs().items():
+                    if rid not in kept:
+                        rdd.unpersist(True)
         rec.columns = rec.df.columns
         rec.job_rows = self._job_rows(group, build_end_ms)
         rec.jobs = len(rec.job_rows)

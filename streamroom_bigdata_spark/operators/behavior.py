@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash_mod, sql_hash_mod
+from ..functions.reliability import materialize
 from ..functions.timeutil import epoch_ms
 from ..registry import register
 from ..sources import load_table
@@ -815,7 +816,7 @@ def markov_stationary_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE user-keyed lag shuffle (shared with
     markov_transitions) is the only data-sized stage; all
     MARKOV_PI_ROUNDS iterations run on the |types|²-bounded matrix with
-    the |types|-row π localCheckpointed per round."""
+    the |types|-row π checkpointed per round."""
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -841,7 +842,7 @@ def markov_stationary_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.sum("n_trans").over(wrow)
             ).alias("p"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     n_states = states.count()  # |types|-bounded driver scalar
     if n_states == 0:
@@ -853,7 +854,7 @@ def markov_stationary_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     pi = states.select(
         "i", (F.lit(1.0) / float(n_states)).alias("pi")
-    ).localCheckpoint()
+    ).transform(materialize)
     for _ in range(MARKOV_PI_ROUNDS):
         r = (
             pi.join(pmat, "i")
@@ -865,7 +866,7 @@ def markov_stationary_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         pi = (
             r.crossJoin(F.broadcast(tot))
             .select("i", (F.col("v") / F.col("t")).alias("pi"))
-            .localCheckpoint()
+            .transform(materialize)
         )
     return pi.select(
         F.col("i").alias("event_type"),

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 from .dedup import dedup_clusters, near_dup_oracle
@@ -254,7 +255,7 @@ def curation_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the survivor set feeds BOTH the rate derivation and the final join;
     # without materialization each consumer re-runs the whole 5-stage
     # pipeline above. Flat 3-column rows, survivor-sized at any scale.
-    surv = surv.cache()
+    surv = materialize(surv)
     cnt = surv.groupBy("source").agg(F.count("*").cast("double").alias("n_s"))
     tot = cnt.agg(F.sum(F.sqrt("n_s")).alias("sw"))
     rates = cnt.crossJoin(F.broadcast(tot)).select(

@@ -31,6 +31,7 @@ from ..functions.hashing import (
     sql_hash64,
     sql_hash_mod,
 )
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 
@@ -355,21 +356,14 @@ def hot_bucket_report(bands: DataFrame, max_bucket_size: int) -> DataFrame:
     )
 
 
-def counted_bands(
-    bands: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
-    """Band table + per-bucket count, materialized once. localCheckpoint:
-    the counted band table is tiny (N_BANDS rows per doc, flat ints) but
-    its upstream — shingle explode → md5 → signature min-agg → band window
-    — would otherwise recompute for each consumer (self-join left/right +
-    hot path + size lookups). ``checkpoint_dir``: use a RELIABLE checkpoint
-    instead, so a lost executor doesn't abort the run (see
-    :func:`connected_components`)."""
-    from ..functions.reliability import make_checkpointer
-
+def counted_bands(bands: DataFrame) -> DataFrame:
+    """Band table + per-bucket count, materialized once: the counted band
+    table is tiny (N_BANDS rows per doc, flat ints) but its upstream —
+    shingle explode → md5 → signature min-agg → band window — would
+    otherwise recompute for each consumer (self-join left/right + hot path
+    + size lookups)."""
     w = Window.partitionBy("band_id", "band_key")
-    counted = bands.withColumn("_bucket_n", F.count("*").over(w))
-    return make_checkpointer(bands.sparkSession, checkpoint_dir)(counted)
+    return materialize(bands.withColumn("_bucket_n", F.count("*").over(w)))
 
 
 def lsh_candidate_pairs(
@@ -411,7 +405,7 @@ def lsh_candidate_pairs(
         )
         hot = counted.filter(F.col("_bucket_n") > max_bucket_size)
 
-    # localCheckpoint erased the band table's statistics, so WITHOUT a hint
+    # materialization erased the band table's statistics, so WITHOUT a hint
     # Catalyst may broadcast one side of this self-join on a default size
     # estimate — measured at 516 MiB on the sf≈1 corpus (tools/
     # shuffle_audit.py), a driver OOM at real scale. shuffle_hash pins a
@@ -475,7 +469,7 @@ def lsh_candidate_pairs(
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-duplicate pairs (L2): band the signatures, self-join
     on (band_id, band_key) buckets for candidates, verify candidates with
-    exact shingle Jaccard. Everything flows from ONE cached flat
+    exact shingle Jaccard. Everything flows from ONE materialized flat
     (doc_id, shingle-hash) table: signatures are a min-agg, candidate
     generation a hash shuffle on band keys, and the exact verification a
     join-count intersection (|A∩B| via equi-join on hash; |A∪B| =
@@ -483,7 +477,7 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     every stage is a plain shuffle that scales linearly. Band buckets larger
     than ``NEAR_DUP_MAX_BUCKET`` switch to star-linked candidates (hot-key
     guard) so no single bucket can go quadratic."""
-    ex = exploded_shingle_df(spark, sf_dir).cache()
+    ex = materialize(exploded_shingle_df(spark, sf_dir))
     # one aggregate produces signatures AND shingle-set sizes; the sizes
     # ride the banding explode into the materialized band table AND through
     # candidate generation (carry_sizes), so the Jaccard denominators below
@@ -492,7 +486,7 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = counted_bands(signature_bands(sigs, keep=("n_sh",)))
     cand = lsh_candidate_pairs(counted, pre_counted=True, carry_sizes=True)
 
-    # shuffle_hash: the shingle table is CORPUS-sized — its columnar-cache
+    # shuffle_hash: the shingle table is CORPUS-sized — its materialized
     # size ESTIMATE sits under the broadcast threshold while the
     # deserialized broadcast reality measured 192+295 MiB at sf≈1
     # (tools/shuffle_audit.py), i.e. an un-broadcastable side chosen for
@@ -1032,7 +1026,6 @@ _CC_PLAIN_ROUNDS = 2
 def connected_components(
     pairs: DataFrame,
     max_rounds: int = 20,
-    checkpoint_dir: str | None = None,
     small_graph_threshold: int = _CC_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """(id, component) labels for the undirected graph given as (doc_a,
@@ -1042,31 +1035,15 @@ def connected_components(
     diameters up to ~2**rounds); exceeding it raises rather than returning
     silently split components.
 
-    ``checkpoint_dir``: when set, per-round materialization uses RELIABLE
-    checkpoints (``df.checkpoint()`` into that directory) instead of
-    ``localCheckpoint``. localCheckpoint stores executor-local blocks — fine
-    on local[32], but at cluster scale one lost executor aborts the whole
-    iteration; reliable checkpoints survive executor loss at the cost of a
-    write to fault-tolerant storage per round (measured at sf0.1,
-    interleaved A/B warm medians over the distributed path: 1.37 s local
-    vs 1.39 s reliable — the per-round labels table is output-sized, so
-    the extra write is noise next to the join cost; at cluster scale the
-    write cost follows the label table, not the corpus).
-
     ``small_graph_threshold``: at or below this many (symmetrized,
     materialized) edges the graph is collected and solved with driver-side
     union-find (:func:`_driver_union_find`) — identical labels, none of the
     per-round planning overhead. Set to 0 to force the distributed path."""
-    spark = pairs.sparkSession
-    from ..functions.reliability import make_checkpointer
-
-    ckpt = make_checkpointer(spark, checkpoint_dir)
-
     # Materialize the PAIR table (half the symmetrized edge table) — the
     # pair pipeline runs once, and symmetrization below is a lazy union of
     # two projections over the materialized blocks (narrow, re-read per
     # consumer but never recomputed).
-    pairs = ckpt(pairs.toDF("src", "dst"))
+    pairs = materialize(pairs.toDF("src", "dst"))
 
     # Size-aware parallelism: count is free on the materialized pair table,
     # and coalesce is a narrow op on the checkpointed blocks. A 256-pair
@@ -1120,7 +1097,7 @@ def connected_components(
         if rnd < _CC_PLAIN_ROUNDS:
             # plain round: ONE job — lazy checkpoint with the changed-count
             # below as its single materializing consumer
-            new_labels = ckpt(prop, eager=False)
+            new_labels = materialize(prop, eager=False)
         else:
             # (b) pointer doubling: jump to the label's label. Labels are
             # always node ids (mins over ids), so the lookup self-join
@@ -1129,11 +1106,11 @@ def connected_components(
             # must be EAGERLY materialized first — a lazy checkpoint here
             # recomputes the hash-min subtree per consumer (ADVICE r6;
             # measured earlier for the band table).
-            prop = ckpt(prop)
+            prop = materialize(prop)
             lbl = prop.select(
                 F.col("id").alias("_pid"), F.col("component").alias("_pcomp")
             )
-            new_labels = ckpt(
+            new_labels = materialize(
                 prop.join(lbl, prop.component == lbl._pid, "left").select(
                     "id",
                     "prev",
@@ -1438,24 +1415,24 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether N_MINHASH is sized right BEFORE they raise it and pay 2× the
     signature shuffle — the dedup family's measurement face.
 
-    Scale shape: identical stages to near_dup_pairs (same cached shingle
+    Scale shape: identical stages to near_dup_pairs (same materialized shingle
     table, same capped band self-join, same join-count intersection) plus
     two doc-keyed signature joins; the calibration aggregate is 1-row
     combinable. The estimator arithmetic (matches/8, |∩|/|∪|) is exact
     integer division on both engines; only the final averages are
     accumulation-ordered floats (round-6 convention)."""
-    ex = exploded_shingle_df(spark, sf_dir).cache()
+    ex = materialize(exploded_shingle_df(spark, sf_dir))
     # materialize the signature table ONCE: three consumers (banding, the
     # sa and sb signature joins) would otherwise each re-run the doc-keyed
-    # min-aggregate over the cached shingle table — round-15 profile
+    # min-aggregate over the shingle table — round-15 profile
     # showed three identical ~0.8 s aggregation jobs per run (guide §2.4).
-    # Flat doc-sized rows (8 ints + size), localCheckpoint truncates the
+    # Flat doc-sized rows (8 ints + size); the checkpoint truncates the
     # lineage so the three consumers plan over a leaf. Round-16 A/B
     # (VERDICT r15 item 1, interleaved, 6 reps/arm, same epoch): checkpoint
     # median cold/warm 6.19/3.09 s vs 7.37/3.23 unmaterialized (r14
     # spelling) vs 6.88/3.84 cache+count — the r15 driver cold regression
     # was the storm epoch, not the barrier; the checkpoint stays.
-    sigs = minhash_signatures_of(ex, with_size=True).localCheckpoint()
+    sigs = materialize(minhash_signatures_of(ex, with_size=True))
     counted = counted_bands(signature_bands(sigs, keep=("n_sh",)))
     cand = lsh_candidate_pairs(counted, pre_counted=True, carry_sizes=True)
 

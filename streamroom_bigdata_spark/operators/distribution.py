@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.ranking import range_partition_offsets
 from ..functions.timeutil import epoch_ms
 from ..functions.localdf import local_df
+from ..functions.reliability import materialize
 from ..registry import register
 from ..session import shuffle_partition_count
 from ..sources import load_table
@@ -246,7 +247,7 @@ def _daily_orders(od: DataFrame, cents: bool = False) -> DataFrame:
     calendar span at ANY data scale. Each consumer loads ``od`` through its
     own module's ``load_table``.
 
-    Materialized ONCE via localCheckpoint (round 16; guide §2.4): every
+    Materialized ONCE (round 16; guide §2.4): every
     consumer (theil_sen, acf, spearman, ljung_box, dow bands, the quant
     module's rank and pair statistics) reads the day table 2-5 times, and
     without the barrier each read re-ran the data-sized orders scan + day
@@ -265,7 +266,7 @@ def _daily_orders(od: DataFrame, cents: bool = False) -> DataFrame:
         )
         .groupBy("d")
         .agg(F.sum(v).alias(rev), F.count("*").alias("n_orders"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
 
@@ -774,7 +775,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pin the k+1-row result: the relation is consumed twice (threshold
         # aggregate + excess terms) and Spark does not reuse TakeOrdered
         # subtrees — unpinned, the data-sized scan+heap would run twice
-        .localCheckpoint()
+        .transform(materialize)
     )
     thr = topk.agg(F.min("x").alias("x_thr"))
     log_sum = F.sum(F.log(F.col("x") / F.col("x_thr")))

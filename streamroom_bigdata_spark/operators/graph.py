@@ -16,8 +16,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.reliability import make_checkpointer
 from ..functions.localdf import local_df
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 from .dedup import simhash_near_dup, simhash_near_dup_oracle
@@ -27,12 +27,6 @@ PR_DAMPING = 0.85
 # lineage truncation cadence: checkpoint every N rounds (each round adds a
 # join+agg to the plan; unbounded growth re-plans the whole chain per round)
 _PR_CKPT_EVERY = 4
-
-
-# shared local-vs-reliable materialization strategy (see the module
-# docstring of functions/reliability.py for the contract and the measured
-# reliable-mode overhead)
-_checkpointer = make_checkpointer
 
 
 def _edges_sql() -> str:
@@ -95,7 +89,6 @@ def pagerank(
     iters: int = PR_ITERS,
     damping: float = PR_DAMPING,
     small_graph_threshold: int = _PR_DRIVER_MAX_EDGES,
-    checkpoint_dir: str | None = None,
     mirror: bool = False,
 ) -> DataFrame:
     """(id, rank) after ``iters`` power iterations over a SYMMETRIZED
@@ -108,10 +101,6 @@ def pagerank(
     numpy matvec on the driver — identical ranks (to float noise far below
     the round-5 output), none of the per-round overhead.
 
-    ``checkpoint_dir``: reliable per-round checkpoints instead of
-    localCheckpoint — see :func:`_checkpointer`; identical ranks either
-    way (path-equivalence test in tests/test_graph.py).
-
     ``mirror=True``: ``edges_sym`` carries only ONE orientation of each
     undirected edge and the graph is its symmetrization. Both engine paths
     derive the mirrored half from the materialized forward half (a numpy
@@ -120,8 +109,7 @@ def pagerank(
     transfer for the same edge multiset (round-15: the transaction graph
     moved 1.17 M symmetrized edges through localCheckpoint + toPandas when
     587 k forward pairs carry the same information)."""
-    ckpt = _checkpointer(edges_sym.sparkSession, checkpoint_dir)
-    edges = ckpt(edges_sym)  # materialize once
+    edges = materialize(edges_sym)  # materialize once
     n_edges = edges.count() * (2 if mirror else 1)
     if n_edges == 0:
         # empty graph → empty labeling (1.0/n would divide by zero)
@@ -154,7 +142,7 @@ def pagerank(
             .select(F.col("dst").alias("id"), "rank")
         )
         if k % _PR_CKPT_EVERY == 0 and k < iters:
-            ranks = ckpt(ranks)
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -321,7 +309,6 @@ def personalized_pagerank(
     iters: int = PR_ITERS,
     damping: float = PR_DAMPING,
     small_graph_threshold: int = _PR_DRIVER_MAX_EDGES,
-    checkpoint_dir: str | None = None,
     mirror: bool = False,
 ) -> DataFrame:
     """(id, rank) after ``iters`` rounds of PERSONALIZED power iteration:
@@ -337,8 +324,7 @@ def personalized_pagerank(
     or broadcast-hinted; lineage truncated every ``_PR_CKPT_EVERY``
     rounds. Bounded graphs take the numpy driver path (identical ranks to
     float noise far below the round-7 output)."""
-    ckpt = _checkpointer(edges_sym.sparkSession, checkpoint_dir)
-    edges = ckpt(edges_sym)
+    edges = materialize(edges_sym)
     n_edges = edges.count() * (2 if mirror else 1)
     if n_edges == 0:
         spark = edges.sparkSession
@@ -364,7 +350,7 @@ def personalized_pagerank(
         .otherwise(F.lit(0.0))
         .alias("base"),
     )
-    base = ckpt(base)  # loop-invariant (id, base)
+    base = materialize(base)  # loop-invariant (id, base)
     ranks = base.select(
         "id",
         F.when(seed, F.lit(1.0 / s_count)).otherwise(F.lit(0.0)).alias("rank"),
@@ -385,7 +371,7 @@ def personalized_pagerank(
             ).alias("rank"),
         )
         if k % _PR_CKPT_EVERY == 0 and k < iters:
-            ranks = ckpt(ranks)
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -503,9 +489,7 @@ FROM e ab JOIN e bc ON ab.doc_b = bc.doc_a
 _TRIANGLE_MAX_WEDGES = 200_000_000
 
 
-def _triangles(
-    pairs: DataFrame, checkpoint_dir: str | None = None
-) -> tuple[DataFrame, DataFrame]:
+def _triangles(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(triangle frame (ta, tb, tc), symmetric degree frame (u, deg)) over
     canonical (doc_a < doc_b) pairs. DEGREE-ORIENTED two-hop join — every
     edge is re-oriented from its lower-(degree, id) endpoint to the higher
@@ -514,13 +498,10 @@ def _triangles(
     (the classic m^1.5 algorithm). Orientation changes the PLAN, not the
     triangles. Refuses (loud RuntimeError) when the measured wedge count
     exceeds ``_TRIANGLE_MAX_WEDGES`` — on quasi-clique graphs the output
-    itself is Θ(n³) and no enumeration can be cheaper.
-
-    ``checkpoint_dir``: reliable materialization of the edge and
-    oriented-edge tables (both read by three downstream joins) instead of
-    localCheckpoint — see :func:`_checkpointer`."""
-    ckpt = _checkpointer(pairs.sparkSession, checkpoint_dir)
-    e = ckpt(pairs.toDF("u", "v"))
+    itself is Θ(n³) and no enumeration can be cheaper. The edge and
+    oriented-edge tables are materialized: three downstream joins read
+    each."""
+    e = materialize(pairs.toDF("u", "v"))
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
     # orient: src = endpoint with smaller (deg, id); ties broken by id
@@ -542,7 +523,7 @@ def _triangles(
         )
         .select("o.src", "o.dst")
     )
-    oriented = ckpt(oriented)
+    oriented = materialize(oriented)
     outdeg = oriented.groupBy("src").agg(F.count("*").alias("od"))
     wedges = outdeg.agg(F.sum(F.col("od") * F.col("od"))).collect()[0][0] or 0
     if wedges > _TRIANGLE_MAX_WEDGES:
@@ -569,13 +550,10 @@ def _triangles(
     return tri, deg
 
 
-def count_triangles(
-    pairs: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
+def count_triangles(pairs: DataFrame) -> DataFrame:
     """Exact triangle count (1 row, ``n_triangles``) — see
-    :func:`_triangles` for the oriented plan, the wedge guard, and the
-    ``checkpoint_dir`` reliability option."""
-    tri, _ = _triangles(pairs, checkpoint_dir=checkpoint_dir)
+    :func:`_triangles` for the oriented plan and the wedge guard."""
+    tri, _ = _triangles(pairs)
     return tri.agg(F.count("*").alias("n_triangles"))
 
 
@@ -632,13 +610,10 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def local_clustering(
-    pairs: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
+def local_clustering(pairs: DataFrame) -> DataFrame:
     """(doc_id, degree, n_triangles, clustering_coeff) over canonical
-    pairs — the composable core behind :func:`clustering_coefficient`.
-    ``checkpoint_dir`` → reliable edge materialization (:func:`_triangles`)."""
-    tri, deg = _triangles(pairs, checkpoint_dir=checkpoint_dir)
+    pairs — the composable core behind :func:`clustering_coefficient`."""
+    tri, deg = _triangles(pairs)
     # ONE enumeration pass: a 3-way union of projections would re-execute
     # the wedge join per branch (ReuseExchange shares shuffle data, not
     # join compute) — explode emits all three corners from a single run
@@ -703,7 +678,6 @@ def k_core(
     k: int,
     max_rounds: int = 100,
     small_graph_threshold: int = _KCORE_DRIVER_MAX_EDGES,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Nodes of the k-core (maximal subgraph where every node has degree
     ≥ k) as (id, core_degree), over canonical (a < b) pairs. Iterative
@@ -716,15 +690,9 @@ def k_core(
 
     No SQL oracle: the peel runs a DATA-DEPENDENT number of rounds, which
     recursive SQL cannot express with aggregation — covered by known-graph
-    and path-equivalence tests instead (tests/test_graph.py).
-
-    ``checkpoint_dir``: reliable per-round materialization of the peeled
-    edge table — see :func:`_checkpointer`. The peel can run tens of
-    rounds on deep cores, so round-surviving state matters more here than
-    anywhere else in the family."""
+    and path-equivalence tests instead (tests/test_graph.py)."""
     spark = pairs.sparkSession
-    ckpt = _checkpointer(spark, checkpoint_dir)
-    edges = ckpt(
+    edges = materialize(
         pairs.toDF("u", "v").unionByName(
             pairs.toDF("u", "v").select(
                 F.col("v").alias("u"), F.col("u").alias("v")
@@ -744,7 +712,7 @@ def k_core(
             return deg.select(
                 F.col("u").alias("id"), F.col("d").alias("core_degree")
             )
-        edges = ckpt(
+        edges = materialize(
             edges.join(bad, "u", "left_anti")
             .join(bad.select(F.col("u").alias("v")), "v", "left_anti")
         )
@@ -852,14 +820,13 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the symmetrized edge set ONCE: each round's isEmpty()
     # action and the final degree count would otherwise re-execute the
     # whole near-dup pipeline (banding + Hamming verify) per round — the
-    # per-round truncation discipline of k_core/_checkpointer, in the
-    # local form the small fixed unroll needs
+    # per-round truncation discipline of k_core
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .unionAll(
             pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     for _ in range(KCORE_PEEL_ROUNDS):
         deg = edges.groupBy("u").agg(F.count("*").alias("d"))
@@ -869,7 +836,7 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = (
             edges.join(bad, "u", "left_anti")
             .join(bad.select(F.col("u").alias("v")), "v", "left_anti")
-            .localCheckpoint()
+            .transform(materialize)
         )
     return edges.groupBy("u").agg(F.count("*").alias("core_degree")).select(
         F.col("u").alias("doc_id"), "core_degree"
@@ -958,16 +925,13 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 def label_propagation(
     pairs: DataFrame,
     rounds: int = LPA_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, lbl) after ``rounds`` synchronous label-propagation rounds
     over canonical pairs — the composable core behind
     :func:`label_propagation_communities`. Lineage is truncated every
     ``_PR_CKPT_EVERY`` rounds (same cadence as pagerank; a no-op at the
     default 3 rounds, so the registered query's plan and hash are
-    unchanged); ``checkpoint_dir`` makes those truncations reliable
-    checkpoints — see :func:`_checkpointer`."""
-    ckpt = _checkpointer(pairs.sparkSession, checkpoint_dir)
+    unchanged)."""
     sym = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionAll(
@@ -989,7 +953,7 @@ def label_propagation(
             .select(F.col("u").alias("id"), "lbl")
         )
         if k % _PR_CKPT_EVERY == 0 and k < rounds:
-            labels = ckpt(labels)
+            labels = materialize(labels)
     return labels
 
 
@@ -1031,28 +995,24 @@ FROM d{BFS_ROUNDS} GROUP BY dist
 def bfs_hops(
     edges_sym: DataFrame,
     rounds: int = BFS_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Unweighted BFS from the minimum node id over symmetrized edges:
     returns (id, dist) for every node within ``rounds`` hops. Each round
     expands only the FRONTIER (nodes first reached last round) — the
     standard distributed BFS where per-round work is frontier-sized, not
-    graph-sized — then folds into the running min-distance relation.
-    Lineage is cut with the shared graph-family checkpointer (reliable
-    `df.checkpoint` when a dir is given, localCheckpoint otherwise)."""
-    spark = edges_sym.sparkSession
-    ckpt = make_checkpointer(spark, checkpoint_dir)
-    edges = ckpt(edges_sym)
+    graph-sized — then folds into the running min-distance relation,
+    materialized each round."""
+    edges = materialize(edges_sym)
     seed = edges.agg(F.min("src").alias("id")).select(
         "id", F.lit(0).cast("bigint").alias("dist")
     )
-    dist = ckpt(seed)
+    dist = materialize(seed)
     for k in range(1, rounds + 1):
         frontier = dist.filter(F.col("dist") == k - 1)
         expanded = frontier.join(edges, frontier.id == edges.src).select(
             F.col("dst").alias("id"), (F.lit(k)).cast("bigint").alias("dist")
         )
-        dist = ckpt(
+        dist = materialize(
             dist.unionByName(expanded).groupBy("id").agg(
                 F.min("dist").cast("bigint").alias("dist")
             )
@@ -1176,14 +1136,14 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifacts of the label process. The oracle replays the identical LPA
     rounds (shared WITH-chain) and checks the modularity terms exactly.
 
-    Scale shape: the pair relation is localCheckpoint-materialized once
+    Scale shape: the pair relation is materialized once
     and reused by the propagation rounds, the intra-edge count, the
     degree sum, and the 1-driver-scalar edge count — no stage above it
     exceeds edge size, and all aggregates are combinable."""
     pairs = (
         simhash_near_dup(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .transform(materialize)
     )
     labels = label_propagation(pairs)
     return modularity_from_pairs(pairs, labels)
@@ -1264,7 +1224,6 @@ FROM g
 def scc_labels(
     edges: DataFrame,
     iters: int = SCC_ITERS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, fwd, bwd) after ``iters`` rounds of forward AND backward
     min-label propagation over a DIRECTED (src, dst) edge frame:
@@ -1283,8 +1242,7 @@ def scc_labels(
     node-sized label frames; lineage truncated every ``_PR_CKPT_EVERY``
     rounds like the pagerank loop. Labels are node-sized relations at
     every step — nothing data-sized ever accumulates."""
-    ckpt = _checkpointer(edges.sparkSession, checkpoint_dir)
-    edges = ckpt(edges)
+    edges = materialize(edges)
     nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select("dst"))
@@ -1308,7 +1266,7 @@ def scc_labels(
         fwd = _round(fwd, "src", "dst")
         bwd = _round(bwd, "dst", "src")
         if k % _PR_CKPT_EVERY == 0 and k < iters:
-            fwd, bwd = ckpt(fwd), ckpt(bwd)
+            fwd, bwd = materialize(fwd), materialize(bwd)
     return fwd.select("id", F.col("lbl").alias("fwd")).join(
         bwd.select("id", F.col("lbl").alias("bwd")), "id"
     )
@@ -1384,12 +1342,10 @@ def scc_min_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: C(40,2) = 780 pairs — the winnow df-guard argument.
 AA_MAX_DEG = 40
 
-def _capped_contrib(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def _capped_contrib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The link-prediction quartet's shared candidate relation —
     degree-capped DISTINCT (cust, part, dg) co-purchase rows —
-    materialized ONCE per query via localCheckpoint (guide §2.4/§5).
+    materialized ONCE per query (guide §2.4/§5).
 
     Round-15 measurement: the quartet's DataFrame DAGs consumed this
     subtree 2-4× (self-join a/b sides + the part-degree aggregates), and
@@ -1427,12 +1383,8 @@ def _capped_contrib(
     # same epoch): eager localCheckpoint median cold/warm 6.53/3.03 s
     # (jaccard_links) vs 7.26/3.41 unmaterialized (r14 spelling) vs
     # 9.68/2.88 cache+count — the r15 driver cold regression was the storm
-    # epoch, not the barrier; the checkpoint stays. ``checkpoint_dir``
-    # threads the reliable-checkpoint option for cluster callers (ADVICE
-    # r15): registry queries pass None (local blocks — a lost executor
-    # rewinds the query, acceptable for a bench/local run and documented
-    # in functions/reliability.py).
-    return make_checkpointer(spark, checkpoint_dir)(contrib)
+    # epoch, not the barrier; the checkpoint stays.
+    return materialize(contrib)
 
 
 adamic_adar_oracle = f"""
@@ -1610,8 +1562,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_HITS_CKPT_EVERY`` rounds (pagerank cadence)."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    ckpt = _checkpointer(spark, None)
-    edges = ckpt(
+    edges = materialize(
         orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
@@ -1643,8 +1594,8 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c", (F.col("h") / F.col("mass")).alias("h")
         )
         if k % _HITS_CKPT_EVERY == 0 and k < HITS_ITERS:
-            hubs = ckpt(hubs)
-            auth = ckpt(auth)
+            hubs = materialize(hubs)
+            auth = materialize(auth)
     return hubs.select(
         F.lit("customer").alias("node_type"),
         F.col("c").alias("node_key"),

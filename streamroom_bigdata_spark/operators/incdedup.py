@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 from ..sources.manifest_table import manifest_append, manifest_read
@@ -256,14 +257,14 @@ def incremental_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probes stay LAZY so the final union runs them as ONE fused job with
     # every signature cache hot (per-probe eager checkpoints serialized
     # three jobs: 17.9 s vs 14.6 s warm at sf0.1, same epoch); the eager
-    # localCheckpoint of the small UNION then detaches lineage so all six
+    # checkpoint of the small UNION then detaches lineage so all six
     # batch-sized feature frames are released HERE — cache lifetime is
     # the query's own execution, never the rest of the session.
     out = (
         outs[0]
         .unionByName(outs[1])
         .unionByName(outs[2])
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     for f in all_feats:
         f.unpersist()

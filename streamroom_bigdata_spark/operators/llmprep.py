@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash_mod, sql_hash_mod
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 
@@ -1040,7 +1041,7 @@ def _bpe_learn(docs: DataFrame) -> tuple[list[DataFrame], DataFrame]:
     determinism), and greedy leftmost-non-overlapping merge spelled as
     gaps-islands parity (consecutive match runs only arise when
     left == right, e.g. 'aaaa' + merge 'aa': keep matches 1 and 3).
-    The symbol table is localCheckpointed per round — vocabulary-sized,
+    The symbol table is checkpointed per round — vocabulary-sized,
     truncates the 5-round window-chain lineage."""
     from pyspark.sql import Window
 
@@ -1063,7 +1064,7 @@ def _bpe_learn(docs: DataFrame) -> tuple[list[DataFrame], DataFrame]:
         F.col("word").substr(
             (F.col("pos") + 1).cast("int"), F.lit(1)
         ).alias("sym"),
-    ).localCheckpoint()
+    ).transform(materialize)
 
     wseq = Window.partitionBy("word").orderBy("pos")
     merges = []
@@ -1078,7 +1079,7 @@ def _bpe_learn(docs: DataFrame) -> tuple[list[DataFrame], DataFrame]:
             .agg(F.sum("cnt").alias("pair_count"))
             .orderBy(F.col("pair_count").desc(), "a", "b")
             .limit(1)
-            .localCheckpoint()
+            .transform(materialize)
         )
         merges.append(
             best.select(
@@ -1149,7 +1150,7 @@ def _bpe_learn(docs: DataFrame) -> tuple[list[DataFrame], DataFrame]:
                 ).alias("pos"),
                 "sym",
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
     return merges, s
 

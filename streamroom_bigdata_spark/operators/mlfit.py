@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import portable_hash_mod, sql_hash_mod
 from ..functions.ranking import range_partition_offsets
 from ..functions.localdf import local_df
+from ..functions.reliability import materialize
 from ..registry import register
 from ..session import shuffle_partition_count
 from ..sources import load_table
@@ -480,7 +481,7 @@ def logreg_gd_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final weights, far inside the round-6 outputs.
 
     Scale shape: one pass per step with map-side combine; the weight
-    state is localCheckpointed per step (1 row — exact statistics, so
+    state is checkpointed per step (1 row — exact statistics, so
     the planner always broadcasts the WEIGHTS, never the feature table;
     the pca_power_iteration lesson)."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -495,7 +496,7 @@ def logreg_gd_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.nullif(F.round(F.stddev_samp("l_discount"), 6), F.lit(0.0)).alias(
             "s2"
         ),
-    ).localCheckpoint()
+    ).transform(materialize)
     feats = (
         li.crossJoin(ms)
         .select(
@@ -505,7 +506,7 @@ def logreg_gd_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0.0)
             .alias("y"),
         )
-        .cache()
+        .transform(materialize)
     )
     w = local_df(
         spark, [(0.0, 0.0, 0.0)], "b0 double, b1 double, b2 double"
@@ -551,7 +552,7 @@ def logreg_gd_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ).alias("b2"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
     z = F.col("b0") + F.col("b1") * F.col("x1") + F.col("b2") * F.col("x2")
     p = 1.0 / (1.0 + F.exp(-z))
@@ -665,7 +666,7 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per step ONE data-sized aggregate computes the E-step responsibilities
     and all M-step moments fused (six decimal-quantized sums — the
     order-independence discipline); the 1-row parameter state
-    localCheckpoints and broadcasts back. No per-row state, no second
+    checkpoints and broadcasts back. No per-row state, no second
     pass. Densities at these scales (σ ≈ 50) cannot underflow, so the
     responsibility ratio needs no epsilon. Output: weights, component
     means/sigmas, mean log-likelihood."""
@@ -676,15 +677,15 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ms = li.agg(
         F.round(F.avg("value"), 6).alias("m"),
         F.nullif(F.round(F.stddev_samp("value"), 6), F.lit(0.0)).alias("s"),
-    ).localCheckpoint()
-    f = li.select(F.col("value").alias("x")).cache()
+    ).transform(materialize)
+    f = li.select(F.col("value").alias("x")).transform(materialize)
     p = ms.select(
         F.lit(0.5).alias("w1"),
         (F.col("m") - F.col("s")).alias("mu1"),
         F.col("s").alias("s1"),
         (F.col("m") + F.col("s")).alias("mu2"),
         F.col("s").alias("s2"),
-    ).localCheckpoint()
+    ).transform(materialize)
 
     def dens(mu, sig):
         return F.exp(
@@ -740,7 +741,7 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 F.lit(0.0),
             ).alias("s2"),
-        ).localCheckpoint()
+        ).transform(materialize)
     d1 = dens(F.col("mu1"), F.col("s1"))
     d2 = dens(F.col("mu2"), F.col("s2"))
     return f.crossJoin(F.broadcast(p)).agg(

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 
@@ -809,7 +810,7 @@ def image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         [T.StructField("asset_id", T.LongType(), False)]
         + [T.StructField(f"rb{y}", T.LongType(), False) for y in range(DH_H)]
     )
-    fp = assets.mapInPandas(fingerprint, schema).localCheckpoint()
+    fp = assets.mapInPandas(fingerprint, schema).transform(materialize)
 
     bands = fp.select(
         "asset_id",

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localdf import local_df
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 
@@ -396,14 +397,14 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 5.5 s warm → 1.3 s with the cache at sf0.1. Flat schema, so
     # the nested-columnar cache trap (round-1 gotcha) doesn't apply; the
     # cached relation is sketch-sized at ANY corpus scale.
-    # localCheckpoint, not cache (round 15): cache() keeps the corpus-sized
+    # a checkpoint, not cache (round 15): cache() keeps the corpus-sized
     # explode+distinct+window lineage inside the LOGICAL plan, so each of
     # the five consumers re-pays analysis/optimization over the full tree
     # every run — measured ~5 s of driver planning per warm run at sf0.1.
     # The checkpoint truncates the lineage to a K·|sources|-row leaf;
     # downstream planning is then O(sketch), and the materialization job
     # is the same work the first cache fill paid.
-    sk = sk.localCheckpoint()
+    sk = materialize(sk)
     srcs = sk.select("source").distinct()
     pairs = (
         srcs.alias("a")
@@ -776,7 +777,7 @@ def hll_union_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     regs = _hll_registers(
         ev, F.col("user_id").cast("string"), ["event_type"]
-    ).localCheckpoint()  # tiny (|types|·m rows), reused by 3 consumers
+    ).transform(materialize)  # tiny (|types|·m rows), reused by 3 consumers
     est = _hll_estimate(regs, ["event_type"])
     types = regs.select("event_type").distinct()
     pairs = (

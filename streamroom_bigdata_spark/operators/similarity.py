@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, cosine, dot, l2_norm
 from ..functions.localdf import local_df
+from ..functions.reliability import materialize
 from ..registry import register
 from ..sources import load_table
 
@@ -1461,8 +1462,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-row v and 1-row norm cross as AQE runtime broadcasts each round;
     nothing materializes XᵀX (DIM² never exists) and nothing data-sized
     crosses more than the two keyed shuffles per round. The flat explode
-    is cached once (flat projection — the nested-cache trap does not
-    apply) and feeds all 2·PCA_POWER_ITERS matvec scans.
+    is materialized once and feeds all 2·PCA_POWER_ITERS matvec scans.
 
     Float discipline: each matvec sums data-sized products (accumulation
     order differs cross-engine, ~1e-13 relative), but normalization keeps
@@ -1475,7 +1475,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     expl = emb.select(
         "vec_id", F.posexplode(as_double("embedding")).alias("dim", "val")
-    ).cache()
+    ).transform(materialize)
     spark_v = None  # (dim, vv) DataFrame; None = uniform start round
     state: list = []  # driver-held [(dim, vv)] of the last round
     nrm = 0.0
@@ -1493,7 +1493,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # dots is DATA-sized (one row per vector): pin the vec-keyed matvec
         # to a shuffled hash join — the static planner's size estimate off
-        # the cached explode under-guesses it and tries to BROADCAST it,
+        # the materialized explode under-guesses it and tries to BROADCAST it,
         # which is exactly the stage that must never happen at scale.
         # The DIM-row matvec result W is the round's WHOLE state: collect
         # it (64 flat rows) and normalize on the driver, then rebuild v as

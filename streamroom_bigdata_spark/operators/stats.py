@@ -964,7 +964,7 @@ def wasserstein_1d_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("a", F.sum("a_cnt")), ("b", F.sum("b_cnt"))],
         n_parts,
     )
-    # O(P) driver rows (ranged is pid-pinned by localCheckpoint, so this
+    # O(P) driver rows (ranged is pid-pinned by its checkpoint, so this
     # second tiny job reads the checkpointed partitions, not a re-sample):
     # each pid's successor value is the NEXT non-empty partition's minimum
     # (None for the last: its final gap term is zero)

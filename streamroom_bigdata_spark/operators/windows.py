@@ -249,7 +249,7 @@ def quartiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
     n_parts = shuffle_partition_count(spark)
     # pid-pinning + offset collection live in functions/ranking.py (the
-    # localCheckpoint rationale is documented there once for all four
+    # checkpoint rationale is documented there once for all four
     # order-statistic queries)
     ranged, _, offsets_df, totals = range_partition_offsets(
         customer.select("c_acctbal", "c_custkey"),

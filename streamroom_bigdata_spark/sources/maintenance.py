@@ -27,6 +27,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.reliability import materialize
+
 
 def _dir_bytes(spark: SparkSession, path: str) -> int:
     """Total bytes under ``path`` via the Hadoop FileSystem API (works for
@@ -258,11 +260,11 @@ def upsert_partitioned(
             return
         raise
     touched = [r[0] for r in updates.select(part_col).distinct().collect()]
-    # localCheckpoint materializes the touched slice so the subsequent
+    # materializing the touched slice means the subsequent
     # overwrite of the same path doesn't read-and-write one location in a
     # single plan (Spark rejects that)
     cur_touched = (
-        current.filter(F.col(part_col).isin(touched)).localCheckpoint()
+        current.filter(F.col(part_col).isin(touched)).transform(materialize)
     )
     merged = cur_touched.join(
         updates.select(key).distinct(), key, "left_anti"

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from urllib.parse import urlparse
+
 import pytest
 
 from streamroom_bigdata_spark.session import get_spark
@@ -93,3 +95,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """Factory: calling it sets the session's checkpoint directory, which
+    switches ``materialize`` to reliable checkpoints, and returns the
+    (still empty) per-context directory Spark creates under it. Teardown
+    restores the session's previous directory (unset, for this test
+    session)."""
+    jsc = spark.sparkContext._jsc.sc()
+    prev = jsc.checkpointDir()
+
+    def enable() -> str:
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        return urlparse(spark.sparkContext.getCheckpointDir()).path
+
+    yield enable
+    getattr(jsc, "checkpointDir_$eq")(prev)

@@ -308,17 +308,18 @@ def test_connected_components_driver_path_matches_distributed(spark):
     assert {c for _, c in via_driver} == {0, 20, 100}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches per-round materialization to reliable
-    checkpoints (fault-tolerant storage) — same labels either way."""
+def test_connected_components_reliable_checkpoint(spark, reliable_checkpoints):
+    """A session checkpoint directory switches per-round materialization
+    to reliable checkpoints (fault-tolerant storage) — same labels either
+    way."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], "doc_a long, doc_b long"
     )
-    ckdir = str(tmp_path / "cc_ckpt")
+    ckdir = reliable_checkpoints()
     got = {
         (r.id, r.component)
         for r in dedup.connected_components(
-            pairs, checkpoint_dir=ckdir, small_graph_threshold=0
+            pairs, small_graph_threshold=0
         ).collect()
     }
     assert got == {(i, 0) for i in range(11)}
@@ -340,9 +341,11 @@ def test_connected_components_two_components(spark):
     assert got == {(0, 0), (1, 0), (2, 0), (10, 10), (11, 10), (12, 10), (13, 10)}
 
 
-def test_counted_bands_reliable_checkpoint_matches_local(spark, tmp_path):
-    """counted_bands(checkpoint_dir=...) — the band-table half of the
-    reliable-checkpoint option — yields the same counted rows as the
+def test_counted_bands_reliable_checkpoint_matches_local(
+    spark, reliable_checkpoints
+):
+    """counted_bands in reliable mode — the band-table half of the
+    reliable-checkpoint policy — yields the same counted rows as the
     localCheckpoint path."""
     from streamroom_bigdata_spark.operators.dedup import (
         counted_bands,
@@ -355,9 +358,8 @@ def test_counted_bands_reliable_checkpoint_matches_local(spark, tmp_path):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
     bands = signature_bands(minhash_signatures_of(exploded_shingles_of(docs)))
     local = sorted(map(tuple, counted_bands(bands).collect()))
-    reliable = sorted(
-        map(tuple, counted_bands(bands, checkpoint_dir=str(tmp_path / "ck")).collect())
-    )
+    reliable_checkpoints()
+    reliable = sorted(map(tuple, counted_bands(bands).collect()))
     assert local == reliable and len(local) > 0
 
 

@@ -190,70 +190,62 @@ def _ckdir_used(path):
     return os.path.isdir(path) and any(os.scandir(path))
 
 
-def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path):
-    """pagerank(checkpoint_dir=...) on the distributed path: identical
-    ranks vs localCheckpoint, and the reliable dir is written."""
+def test_pagerank_reliable_checkpoint_matches_local(spark, reliable_checkpoints):
+    """pagerank in reliable mode on the distributed path: identical ranks
+    vs localCheckpoint, and the reliable dir is written."""
     pairs = [(i, (i * 7 + 3) % 40 + 100) for i in range(60)] + [
         (i, (i + 1) % 20) for i in range(20)
     ]
     edges = _sym(spark, pairs)
-    ckdir = str(tmp_path / "pr_ckpt")
     local = {
         r.id: r.rank
         for r in graph.pagerank(edges, small_graph_threshold=0).collect()
     }
+    ckdir = reliable_checkpoints()
     reliable = {
         r.id: r.rank
-        for r in graph.pagerank(
-            edges, small_graph_threshold=0, checkpoint_dir=ckdir
-        ).collect()
+        for r in graph.pagerank(edges, small_graph_threshold=0).collect()
     }
     assert set(local) == set(reliable)
     assert all(abs(local[k] - reliable[k]) < 1e-12 for k in local)
     assert _ckdir_used(ckdir), "reliable checkpoint dir is empty"
 
 
-def test_k_core_reliable_checkpoint_matches_local(spark, tmp_path):
+def test_k_core_reliable_checkpoint_matches_local(spark, reliable_checkpoints):
     import itertools
 
     pairs = sorted(itertools.combinations(range(8), 2))[:20] + [
         (50 + i, 51 + i) for i in range(6)
     ]
     edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    ckdir = str(tmp_path / "kc_ckpt")
     local = sorted(
         map(tuple, graph.k_core(edges, 3, small_graph_threshold=0).collect())
     )
+    ckdir = reliable_checkpoints()
     reliable = sorted(
-        map(
-            tuple,
-            graph.k_core(
-                edges, 3, small_graph_threshold=0, checkpoint_dir=ckdir
-            ).collect(),
-        )
+        map(tuple, graph.k_core(edges, 3, small_graph_threshold=0).collect())
     )
     assert local == reliable and len(local) > 0
     assert _ckdir_used(ckdir), "reliable checkpoint dir is empty"
 
 
-def test_local_clustering_reliable_checkpoint_matches_local(spark, tmp_path):
+def test_local_clustering_reliable_checkpoint_matches_local(
+    spark, reliable_checkpoints
+):
     import itertools
 
     pairs = sorted(itertools.combinations([1, 2, 3, 4], 2)) + [(4, 5), (5, 6)]
     edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    ckdir = str(tmp_path / "tri_ckpt")
     local = sorted(map(tuple, graph.local_clustering(edges).collect()))
-    reliable = sorted(
-        map(
-            tuple,
-            graph.local_clustering(edges, checkpoint_dir=ckdir).collect(),
-        )
-    )
+    ckdir = reliable_checkpoints()
+    reliable = sorted(map(tuple, graph.local_clustering(edges).collect()))
     assert local == reliable and len(local) > 0
     assert _ckdir_used(ckdir), "reliable checkpoint dir is empty"
 
 
-def test_label_propagation_reliable_checkpoint_matches_local(spark, tmp_path):
+def test_label_propagation_reliable_checkpoint_matches_local(
+    spark, reliable_checkpoints
+):
     """8 rounds so the _PR_CKPT_EVERY cadence actually fires on both
     paths; two K4 cliques bridged by one edge keep two communities."""
     import itertools
@@ -263,17 +255,12 @@ def test_label_propagation_reliable_checkpoint_matches_local(spark, tmp_path):
     edges = spark.createDataFrame(
         c1 + c2 + [(3, 10)], "doc_a long, doc_b long"
     )
-    ckdir = str(tmp_path / "lpa_ckpt")
     local = sorted(
         map(tuple, graph.label_propagation(edges, rounds=8).collect())
     )
+    ckdir = reliable_checkpoints()
     reliable = sorted(
-        map(
-            tuple,
-            graph.label_propagation(
-                edges, rounds=8, checkpoint_dir=ckdir
-            ).collect(),
-        )
+        map(tuple, graph.label_propagation(edges, rounds=8).collect())
     )
     assert local == reliable and len(local) > 0
     assert _ckdir_used(ckdir), "reliable checkpoint dir is empty"

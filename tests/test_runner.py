@@ -2,17 +2,32 @@
 bench.py, profile_query, shuffle_audit and check_oracle: both actions agree,
 its job-group counts equal the status store's count of new jobs, a raising
 query or a failed layout prep is recorded and the session keeps serving,
-and the tools built on it import without reading the importer's argv."""
+runs leave no storage behind, and the tools built on it import without
+reading the importer's argv. Also: materialization goes through
+``functions.reliability.materialize`` only, and its reliable mode."""
 
 from __future__ import annotations
 
+import ast
 import importlib
+import os
+import pathlib
 import sys
 
 import pytest
 
-from streamroom_bigdata_spark import instrument
+from streamroom_bigdata_spark import instrument, registry
 from streamroom_bigdata_spark.instrument import Runner
+
+PKG = pathlib.Path(instrument.__file__).parent
+#: calls that materialize a DataFrame, allowed only in the helper
+MATERIALIZING = {"localCheckpoint", "cache", "persist", "checkpoint"}
+#: top-level functions that persist a frame and unpersist it themselves
+SELF_RELEASING = {
+    ("streaming/router.py", "route_batch"),
+    ("streaming/neardup.py", "streaming_neardup_sink"),
+    ("operators/incdedup.py", "incremental_neardup_pairs"),
+}
 
 
 def _runner(mp, spark, sf_dir, roster) -> Runner:
@@ -92,3 +107,59 @@ def test_tools_import_without_parsing_argv(monkeypatch, module):
     monkeypatch.setattr(sys, "argv", ["prog", "junk", "--json"])
     monkeypatch.delitem(sys.modules, module, raising=False)
     importlib.import_module(module)
+
+
+def _calls(tree):
+    """(top-level function name or None, called attribute name) per call."""
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                yield owner, node.func.attr
+
+
+def test_no_raw_materialization():
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "functions/reliability.py":
+            continue
+        calls = list(_calls(ast.parse(path.read_text())))
+        releases = {owner for owner, attr in calls if attr == "unpersist"}
+        for owner, attr in calls:
+            if attr not in MATERIALIZING:
+                continue
+            if (
+                attr == "persist"
+                and (rel, owner) in SELF_RELEASING
+                and owner in releases
+            ):
+                continue
+            bad.append(f"{rel}:{owner}: .{attr}()")
+    assert not bad, "use functions.reliability.materialize: " + ", ".join(bad)
+
+
+def test_runs_leave_no_storage_behind(spark, sf_dir):
+    names = ["near_dup_pairs", "pca_power_iteration", "gmm_em_1d"]
+    with pytest.MonkeyPatch.context() as mp:
+        r = _runner(mp, spark, sf_dir, names)
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # earlier tests' caches are not these runs'
+    before = set(jsc.getPersistentRDDs().keySet())
+    for name in names:
+        run = r.run(name)
+        assert run.error is None and run.rows > 0, name
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+    assert cache.isEmpty()
+
+
+def test_reliable_mode_at_a_formerly_local_only_site(
+    spark, sf_dir, reliable_checkpoints
+):
+    query = registry.queries()["theil_sen_daily_trend"]
+    local = query(spark, sf_dir).collect()
+    ckdir = reliable_checkpoints()
+    reliable = query(spark, sf_dir).collect()
+    assert reliable == local and len(local) == 1
+    assert any(os.scandir(ckdir)), "reliable checkpoint dir is empty"

@@ -8,26 +8,30 @@ It runs, in order, refusing to write ANY artifact on the first red:
 
 1. ``tools/check_oracle.py`` over the FULL registry at sf0.01
    → ``CHECK_LOCAL_r{N}.json`` (only written if 0 failures)
-2. ``tools/plan_audit.py --write`` (the unpartitioned-window invariant;
+2. the same check at sf0.001 in reliable mode: ``SPARK_CONF_DIR`` points
+   at a temporary ``spark-defaults.conf`` that sets
+   ``spark.checkpoint.dir``, so every materialization takes
+   ``df.checkpoint()`` (writes no artifact)
+3. ``tools/plan_audit.py --write`` (the unpartitioned-window invariant;
    regenerates PLANS.md at the full registry count). NOTE: PLANS.md is
    regenerated in place at this step even if a LATER gate goes red —
    it is derived-at-will metadata, not a round artifact; the CHECK_*
    files are the artifacts this tool guards.
-3. the two plan-guard pytest modules (``tests/test_plans.py``,
+4. the two plan-guard pytest modules (``tests/test_plans.py``,
    ``tests/test_registry_contract.py``)
-4. the full oracle run at sf0.1 → ``CHECK_SF01_r{N}.json``. NOT optional:
+5. the full oracle run at sf0.1 → ``CHECK_SF01_r{N}.json``. NOT optional:
    the round-12 judge proved this scale is a distinct witness —
    `gains_chart_stopword` was green at sf0.01 AND synthetic sf≈1 yet
    engine-divergent at sf0.1, because tie-run sizes and quantile-boundary
    positions move with n; one (or two) scales cannot witness them all.
    Skip only with ``--skip-sf01`` for partial dry-runs — a round-closing
    commit must not carry that flag.
-5. a registry-vs-artifact count check: every artifact it just wrote must
+6. a registry-vs-artifact count check: every artifact it just wrote must
    list exactly the registered query count — the drift this tool exists to
    prevent (rounds 8-9 shipped artifacts 14 queries short of the registry).
-6. optionally (``--sf1-dir``): the full oracle run at a synthetic sf≈1
+7. optionally (``--sf1-dir``): the full oracle run at a synthetic sf≈1
    directory (built with ``tools/make_scale.py``) → ``CHECK_SF1_r{N}.json``.
-7. the SHUFFLE-REGRESSION gate: ``tools/shuffle_audit.py --json`` over the
+8. the SHUFFLE-REGRESSION gate: ``tools/shuffle_audit.py --json`` over the
    bench HEADLINE roster at sf0.1, diffed against the NEWEST prior
    ``SHUFFLES_r{M}.json`` via ``shuffle_audit.diff_books`` — red past the
    documented broadcast/shuffle-row tolerances. This automates the manual
@@ -50,6 +54,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
@@ -92,6 +97,7 @@ def main() -> int:
             return 2
         sf1_dir = sys.argv[i + 1]
 
+    from __spark_entry__ import SMOKE_SF_DIR
     from streamroom_bigdata_spark import registry
 
     n_registered = len(registry.queries())
@@ -105,6 +111,14 @@ def main() -> int:
         [sys.executable, "tools/check_oracle.py", "/root/testdata/sf0.01",
          "--json", tmp_local],
     )
+    with tempfile.TemporaryDirectory() as conf_dir:
+        with open(os.path.join(conf_dir, "spark-defaults.conf"), "w") as f:
+            f.write(f"spark.checkpoint.dir {os.path.join(conf_dir, 'ckpt')}\n")
+        run(
+            "oracle gate at sf0.001, reliable checkpoints",
+            ["env", f"SPARK_CONF_DIR={conf_dir}", sys.executable,
+             "tools/check_oracle.py", SMOKE_SF_DIR],
+        )
     run("plan audit (+ PLANS.md regeneration)",
         [sys.executable, "tools/plan_audit.py", "--write"])
     run("plan-guard pytest modules",
