@@ -41,36 +41,6 @@ from ..sources import load_table
 HAMMING_K = 2  # max mismatching positions; bands = k + 1
 
 
-def interleaved_bands(
-    df: DataFrame, id_col: str, str_col: str, n_bands: int
-) -> DataFrame:
-    """(doc_id, band_id, band_key) with band b holding the characters at
-    positions ≡ b (mod n_bands). The string length is prefixed into the
-    key so different lengths can never collide (Hamming is undefined
-    across lengths). The char-subset extraction is a higher-order filter
-    — interpreted per element, but it runs ONCE per (string, band) on the
-    linear input, never on the candidate pairs."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    ":",
-                    F.length(str_col).cast("string"),
-                    F.expr(
-                        f"array_join(filter(split({str_col}, ''), "
-                        f"(x, i) -> i % {n_bands} == {b}), '')"
-                    ),
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.explode(bands).alias("b")
-    ).select("doc_id", "b.band_id", "b.band_key")
-
-
 def hamming_self_join(
     df: DataFrame, id_col: str, str_col: str, k: int = HAMMING_K
 ) -> DataFrame:

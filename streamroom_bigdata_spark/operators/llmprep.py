@@ -183,10 +183,6 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # benchmark contamination (n-gram overlap)
 # --------------------------------------------------------------------------
 
-_TRIGRAMS_SQL = """
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-"""
-
 contamination_trigrams_oracle = f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS tok,

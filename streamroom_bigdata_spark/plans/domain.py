@@ -3,27 +3,25 @@
 The reference runs its recommendation batch job against the MongoDB
 collections its consumer filled (processing.scala:29-54 reads, 101-129
 scores). This is the same third pipeline stage over OUR bronze store — the
-partitioned parquet the streaming router writes — so the full reference
+per-entity parquet dirs the streaming router writes — so the full reference
 pipeline (CSV → wire → stream → bronze → recommend) runs end-to-end on the
 reference's actual entities (exercised in tests/test_streaming.py).
 
-Same scale shape as the fixture flagship (plans/recommend.py): in-plan
-1-row max broadcast, broadcast distinct-booked left join, request sizes as
-an in-plan dimension, one window top-k — no driver round-trips.
+Scoring is the fixture flagship's :func:`plans.recommend.hybrid_top_k`
+(in-plan 1-row max broadcast, request sizes as an in-plan dimension, one
+window top-k — no driver round-trips); this module only turns the bronze
+entities into its rooms and usage frames.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.localdf import local_df
 from ..schemas import bronze_schema
+from .recommend import TOP_K, hybrid_top_k
 
 REQUEST_SIZES = (25, 40, 60)  # student counts, processing.scala:120-124
-TOP_K = 3
-W_CONTENT, W_COLLAB, W_AVAIL = 0.5, 0.3, 0.2  # processing.scala:110-115
-AVAIL_BOOKED, AVAIL_FREE = 0.5, 1.0  # processing.scala:106-109
 
 
 def _read_bronze(spark: SparkSession, bronze_dir: str, entity: str) -> DataFrame:
@@ -42,9 +40,11 @@ def recommend_classrooms(
 
     Inputs are the router's per-entity parquet dirs: ``classroom`` (capacity
     catalog) and ``fixed_booking`` / ``one_time_booking`` (usage events,
-    reference processing.scala:57 unions them the same way)."""
-    classrooms = _read_bronze(spark, bronze_dir, "classroom").select(
-        "classroom_id", F.col("capacity").cast("int").alias("capacity")
+    reference processing.scala:57 unions them the same way). A classroom is
+    booked exactly when it has a booking, i.e. a usage row."""
+    rooms = _read_bronze(spark, bronze_dir, "classroom").select(
+        F.col("classroom_id").alias("room_id"),
+        F.col("capacity").cast("int").alias("capacity"),
     )
     bookings = None
     for entity in ("fixed_booking", "one_time_booking"):
@@ -56,57 +56,15 @@ def recommend_classrooms(
     if bookings is None:
         bookings = spark.createDataFrame([], "classroom_id string")
 
-    usage = bookings.groupBy("classroom_id").agg(
-        F.count("*").alias("usage_count")
+    usage = (
+        bookings.groupBy(F.col("classroom_id").alias("room_id"))
+        .agg(F.count("*").alias("usage_count"))
+        .withColumn("is_booked", F.lit(True))
     )
-    max_usage = usage.agg(F.max("usage_count").alias("max_usage"))
-    booked = bookings.select("classroom_id").distinct()
-
-    sizes = local_df(
-        spark, [(s,) for s in request_sizes], "request_students int"
-    )
-    scored = (
-        classrooms.join(
-            F.broadcast(sizes),
-            F.col("capacity") >= F.col("request_students"),
-        )
-        .join(usage, "classroom_id", "left")
-        .na.fill({"usage_count": 0})
-        .join(F.broadcast(max_usage))
-        .join(
-            F.broadcast(booked.withColumn("is_booked", F.lit(True))),
-            "classroom_id",
-            "left",
-        )
-        .select(
-            "classroom_id",
-            "request_students",
-            "capacity",
-            (
-                F.lit(W_CONTENT)
-                + F.lit(W_COLLAB)
-                * (
-                    F.col("usage_count")
-                    / F.greatest(F.col("max_usage"), F.lit(1))
-                )
-                + F.lit(W_AVAIL)
-                * F.when(
-                    F.col("is_booked").isNotNull(), F.lit(AVAIL_BOOKED)
-                ).otherwise(F.lit(AVAIL_FREE))
-            ).alias("final_score"),
-        )
-    )
-    w = Window.partitionBy("request_students").orderBy(
-        F.desc("final_score"), F.asc("classroom_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "request_students",
-            "classroom_id",
-            "capacity",
-            F.round("final_score", 6).alias("final_score"),
-            "rnk",
-        )
+    return hybrid_top_k(rooms, usage, request_sizes, k).select(
+        F.col("request_size").alias("request_students"),
+        F.col("room_id").alias("classroom_id"),
+        "capacity",
+        "final_score",
+        F.col("rank").alias("rnk"),
     )

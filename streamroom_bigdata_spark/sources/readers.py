@@ -73,21 +73,43 @@ def _fingerprint(path: str) -> tuple | None:
     return tuple(out)
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def _read_parquet(
+    spark: SparkSession, path: str, confs: dict[str, str] | None = None
+) -> DataFrame:
     """``spark.read.parquet(path)``, with the schema pinned from the catalog
-    when this file version was read before under the same confs."""
+    when this file version was read before under the same confs. ``confs``
+    (name → value) apply to schema inference only: they are set around the
+    inferring read, the caller's values are restored after it, and the
+    returned read is pinned to the inferred schema."""
+    confs = confs or {}
     fingerprint = _fingerprint(path)
-    if fingerprint is None:
-        return spark.read.parquet(path)
-    key = (os.path.abspath(path), tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    key = (
+        os.path.abspath(path),
+        tuple(confs.get(k, spark.conf.get(k, None)) for k in _INFERENCE_CONFS),
+    )
     hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == fingerprint:
+    if fingerprint is not None and hit is not None and hit[0] == fingerprint:
         return spark.read.schema(hit[1]).parquet(path)
     # the fingerprint is taken before inference, so a file rewritten in
     # between is re-inferred on the next read; racing misses both infer and
     # store the same kind of pair, so no lock is needed
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (fingerprint, df.schema)
+    if confs:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            schema = spark.read.parquet(path).schema
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+    if fingerprint is not None:
+        _SCHEMAS[key] = (fingerprint, df.schema)
     return df
 
 
@@ -95,12 +117,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # The fixture events.ts is parquet TIMESTAMP(NANOS), which Spark's
-        # reader rejects outright. Read nanos as int64 and convert to a
-        # microsecond timestamp in-plan (floor division — matches DuckDB's
-        # ns→µs cast truncation, so oracle comparisons agree). Synthetic
-        # events tables written with µs timestamps pass through untouched.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
+        # schema inference rejects outright. Infer nanos as int64 (the conf
+        # holds for that one read) and convert to a microsecond timestamp
+        # in-plan (floor division — matches DuckDB's ns→µs cast truncation,
+        # so oracle comparisons agree). Synthetic events tables written
+        # with µs timestamps pass through untouched.
+        df = _read_parquet(spark, path, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
@@ -246,27 +268,6 @@ def write_kafka_batch(
             "Kafka sink unavailable (connector jar or broker missing); "
             "use a file/memory sink for local testing"
         ) from exc
-
-
-def stream_kafka_sink(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    value_col: str = "value",
-    key_col: str | None = None,
-):
-    """Streaming Kafka sink (S3): returns the configured ``DataStreamWriter``
-    (caller ``.start()``s it) — checkpointed, so output is at-least-once with
-    idempotent-producer semantics left to the broker config."""
-    writer = (
-        to_kafka_records(df, value_col, key_col)
-        .writeStream.format("kafka")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    for k, v in kafka_sink_options(bootstrap_servers, topic).items():
-        writer = writer.option(k, v)
-    return writer
 
 
 def console_sink(df: DataFrame, mode: str = "append", num_rows: int = 20, truncate: bool = False):

@@ -5,9 +5,10 @@ with six independent filter→dedup→write jobs, re-scanning the uncached batch
 each time, with no checkpoint (reference: consumer.scala:57-97). This router
 keeps the capability and fixes the anti-patterns (SURVEY.md §4.3):
 
-- ``route_batch`` persists the batch once, then either writes per-entity
-  parquet dirs (parity layout) or does a single-pass
-  ``partitionBy("source_type")`` write — one job instead of six.
+- ``route_batch`` dedups the whole batch ONCE, on ``(source_type, key)``
+  with each entity's key picked by ``source_type`` (one shuffle, not six),
+  materializes that result eagerly, then writes the six per-entity parquet
+  dirs from it concurrently and releases it.
 - ``start_router`` wires it under ``writeStream.foreachBatch`` WITH a
   checkpoint location, so restarts resume from offsets instead of replaying.
 - Within-batch dedup keeps the reference's per-entity keys
@@ -25,58 +26,53 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..functions.reliability import materialize, release
 from ..schemas import ENTITIES, bronze_schema
 
 
 def route_batch(
-    batch_df: DataFrame,
-    base_dir: str,
-    single_pass: bool = False,
-    batch_id: int | None = None,
+    batch_df: DataFrame, base_dir: str, batch_id: int | None = None
 ) -> None:
-    """Route one micro-batch into the per-entity bronze store.
+    """Route one micro-batch into the per-entity bronze store: one parquet
+    dir per entity with that entity's columns only — the reference's
+    per-collection layout (consumer.scala:60-94).
 
-    ``single_pass=True`` writes once, hive-partitioned by ``source_type``
-    (one shuffle-free job; readers prune partitions). ``single_pass=False``
-    writes one parquet dir per entity with that entity's columns only —
-    the reference's per-collection layout (consumer.scala:60-94) — off a
-    persisted batch so the source is scanned once, not six times.
+    The batch is deduped once, on ``source_type`` and the entity's key
+    (consumer.scala:61-91: ``booking_id`` for fixed bookings, ``onetime_id``
+    for one-time bookings, ...), so the same key under two entities stays in
+    both. That result is materialized eagerly before the six writes start:
+    the writes run concurrently, and a lazily persisted frame would be
+    computed by whichever writes reach it first. After the writes the
+    materialized blocks are released. With ``spark.checkpoint.dir`` set
+    (reliable mode, see ``functions/reliability``), each batch leaves one
+    checkpoint directory of its deduped rows there, removed only when
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.
 
-    ``batch_id`` (round-8 exactly-once upgrade): when set, each entity's
-    rows land in a ``batch_id=<id>`` partition directory written with
-    OVERWRITE — foreachBatch is only at-least-once (a crash mid-batch
-    replays the batch after restart, and plain appends would then
-    duplicate every entity dir already written), but an overwrite keyed on
-    the checkpoint's monotonic batch id makes the replay IDEMPOTENT: the
-    second attempt replaces the partial first attempt byte-for-byte.
-    Readers see a ``batch_id`` partition column (prunable; harmless to
-    entity projections)."""
-    if single_pass:
-        if batch_id is None:
-            batch_df.write.mode("append").partitionBy("source_type").parquet(
-                os.path.join(base_dir, "bronze")
-            )
-        else:
-            # same exactly-once contract as the per-entity branch: the
-            # replayed batch OVERWRITES its own batch_id directory instead
-            # of appending a second copy. source_type stays a hive
-            # partition inside it, so readers still prune on it (partition
-            # pruning is order-insensitive across partition columns).
-            batch_df.write.mode("overwrite").partitionBy("source_type").parquet(
-                os.path.join(base_dir, "bronze", f"batch_id={batch_id}")
-            )
-        return
-    batch_df.persist()
+    ``batch_id`` (exactly-once upgrade): when set, each entity's rows land
+    in a ``batch_id=<id>`` partition directory written with OVERWRITE —
+    foreachBatch is only at-least-once (a crash mid-batch replays the batch
+    after restart, and plain appends would then duplicate every entity dir
+    already written), but an overwrite keyed on the checkpoint's monotonic
+    batch id makes the replay IDEMPOTENT: the second attempt replaces the
+    partial first attempt byte-for-byte. Readers see a ``batch_id``
+    partition column (prunable; harmless to entity projections)."""
+    key = F.expr(
+        "CASE source_type "
+        + " ".join(f"WHEN '{name}' THEN {col}" for name, (_, col) in ENTITIES.items())
+        + " END"
+    )
+    deduped = materialize(
+        batch_df.withColumn("_key", key).dropDuplicates(["source_type", "_key"])
+    )
     try:
 
-        def write_entity(item):
-            name, (_, key) = item
+        def write_entity(name):
             # cast to the bronze layout, so readers can pin its schema (a
             # no-op on the wire-parsed batch, whose types already match)
-            entity = batch_df.filter(F.col("source_type") == name).select(
+            entity = deduped.filter(F.col("source_type") == name).select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name)
                   for f in bronze_schema(name).fields]
-            ).dropDuplicates([key])
+            )
             if batch_id is None:
                 entity.write.mode("append").parquet(os.path.join(base_dir, name))
             else:
@@ -84,21 +80,20 @@ def route_batch(
                     os.path.join(base_dir, name, f"batch_id={batch_id}")
                 )
 
-        # the six writes are independent jobs over the persisted batch —
+        # the six writes are independent jobs over the materialized batch —
         # submit them concurrently so executor slots stay busy (the
         # reference runs them serially AND rescans the source each time)
         with ThreadPoolExecutor(max_workers=len(ENTITIES)) as pool:
-            for fut in [pool.submit(write_entity, it) for it in ENTITIES.items()]:
+            for fut in [pool.submit(write_entity, name) for name in ENTITIES]:
                 fut.result()
     finally:
-        batch_df.unpersist()
+        release(deduped)
 
 
 def start_router(
     wire_stream: DataFrame,
     base_dir: str,
     checkpoint_dir: str,
-    single_pass: bool = False,
     trigger_once: bool = False,
     idempotent: bool = False,
 ) -> StreamingQuery:
@@ -116,10 +111,7 @@ def start_router(
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(
             lambda df, bid: route_batch(
-                df,
-                base_dir,
-                single_pass=single_pass,
-                batch_id=bid if idempotent else None,
+                df, base_dir, batch_id=bid if idempotent else None
             )
         )
     )

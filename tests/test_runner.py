@@ -24,7 +24,6 @@ PKG = pathlib.Path(instrument.__file__).parent
 MATERIALIZING = {"localCheckpoint", "cache", "persist", "checkpoint"}
 #: top-level functions that persist a frame and unpersist it themselves
 SELF_RELEASING = {
-    ("streaming/router.py", "route_batch"),
     ("streaming/neardup.py", "streaming_neardup_sink"),
     ("operators/incdedup.py", "incremental_neardup_pairs"),
 }

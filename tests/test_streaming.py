@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from streamroom_bigdata_spark.schemas import ENTITIES, WIRE_SCHEMA
+from streamroom_bigdata_spark.schemas import ENTITIES, WIRE_SCHEMA, bronze_schema
 from streamroom_bigdata_spark.sources.readers import (
     kafka_source_options,
     stream_file_source,
@@ -70,7 +70,7 @@ def test_csv_to_wire_roundtrip(spark, tmp_path):
 
 
 def test_router_batch_demux_and_dedup(spark, tmp_path):
-    """T1/T2 within-batch: six-way demux off one persisted scan, per-entity
+    """T1/T2 within-batch: six-way demux off one deduped batch, per-entity
     dedup keys, per-entity column subsets."""
     _write_entity_csvs(tmp_path)
     parsed = parse_wire(entity_dir_to_wire(spark, str(tmp_path)))
@@ -86,18 +86,75 @@ def test_router_batch_demux_and_dedup(spark, tmp_path):
         assert spark.read.parquet(str(bronze / "courses")).count() == 0
 
 
-def test_router_single_pass_partitioned(spark, tmp_path):
-    """T1 single-pass variant: one partitionBy(source_type) write; partition
-    pruning serves the per-entity reads."""
-    _write_entity_csvs(tmp_path)
-    parsed = parse_wire(entity_dir_to_wire(spark, str(tmp_path)))
-    route_batch(parsed, str(tmp_path / "out"), single_pass=True)
-    bronze = spark.read.parquet(str(tmp_path / "out" / "bronze"))
-    got = {
-        r.source_type: r.cnt
-        for r in bronze.groupBy("source_type").agg(F.count("*").alias("cnt")).collect()
-    }
-    assert got == {"fixed_booking": 3, "classroom": 2}
+def _newest_job_id(spark) -> int:
+    """Id of the newest job in the status store; job ids are allocated one
+    by one, so two readings differ by the number of jobs in between."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(spark._jvm.java.util.Collections.emptyList())
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_route_batch_dedups_once_and_releases(spark, tmp_path):
+    """3,000 rows over five entities, each key sent 1.5 times on average,
+    and the same key value under every entity: one keyed dedup serves all
+    six writes (the per-entity form submitted 17-18 jobs), each entity
+    keeps each of its keys once, a key shared across entities stays in
+    each, and nothing stays persisted."""
+    entities = ["fixed_booking", "one_time_booking", "classroom", "courses",
+                "professors"]
+    keys = {ENTITIES[e][1] for e in entities}
+    source = F.element_at(
+        F.array(*[F.lit(e) for e in entities]), (F.col("id") % 5 + 1).cast("int")
+    )
+    key = F.concat(F.lit("K"), (F.col("id") / 5).cast("long") % 400)
+    batch = spark.range(3000).select(*[
+        (source if f.name == "source_type" else key if f.name in keys
+         else F.lit(None)).cast(f.dataType).alias(f.name)
+        for f in WIRE_SCHEMA.fields
+    ])
+    bronze = str(tmp_path / "bronze")
+    rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    before = _newest_job_id(spark)
+    route_batch(batch, bronze)
+    assert _newest_job_id(spark) - before <= 8
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == rdds
+    for e in entities:
+        got = spark.read.schema(bronze_schema(e)).parquet(f"{bronze}/{e}")
+        key_col = ENTITIES[e][1]
+        row = got.agg(F.count("*").alias("n"),
+                      F.count_distinct(key_col).alias("keys"),
+                      F.sum((F.col(key_col) == "K1").cast("int")).alias("k1")).first()
+        assert (row.n, row.keys, row.k1) == (400, 400, 1), e
+
+
+def test_recommend_classrooms_planted_store(spark, tmp_path):
+    """Hand-scored store: C1 unbooked (free score), C2/C3 an exact tie at
+    two bookings each (broken by classroom_id), C4/C5 one booking each, C5
+    too small for either request; no one_time_booking directory at all."""
+    from streamroom_bigdata_spark.plans.domain import recommend_classrooms
+
+    bronze = tmp_path / "bronze"
+
+    def plant(entity, rows):
+        schema = bronze_schema(entity)
+        spark.createDataFrame(
+            [tuple(r.get(f.name) for f in schema.fields) for r in rows], schema
+        ).write.parquet(str(bronze / entity))
+
+    plant("classroom", [{"classroom_id": c, "capacity": cap} for c, cap in
+                        [("C1", 30), ("C2", 50), ("C3", 50), ("C4", 80), ("C5", 20)]])
+    plant("fixed_booking", [{"booking_id": f"B{i}", "classroom_id": c} for i, c in
+                            enumerate(["C2", "C3", "C2", "C3", "C4", "C5"])])
+    got = recommend_classrooms(spark, str(bronze), (25, 60), 4).collect()
+    # max usage 2: 0.5 + 0.3*usage/2 + 0.2*(0.5 if booked else 1.0)
+    assert sorted(map(tuple, got)) == [
+        (25, "C1", 30, 0.7, 4),
+        (25, "C2", 50, 0.9, 1),
+        (25, "C3", 50, 0.9, 2),
+        (25, "C4", 80, 0.75, 3),
+        (60, "C4", 80, 0.75, 1),
+    ]
 
 
 def test_streaming_router_end_to_end(spark, tmp_path):
@@ -1246,27 +1303,6 @@ def test_route_batch_idempotent_replay(spark, tmp_path):
     route_batch(rows, plain)
     route_batch(rows, plain)  # replay duplicates without the batch_id key
     assert spark.read.parquet(f"{plain}/fixed_booking").count() == 2
-
-
-def test_route_batch_single_pass_idempotent_replay(spark, tmp_path):
-    """single_pass=True must honor the same exactly-once contract: a
-    replayed micro-batch overwrites its own batch_id partition instead of
-    appending a second copy (the r9 contract gap: single_pass used to
-    ignore batch_id and silently stay at-least-once)."""
-    import json
-
-    line = json.loads(_wire_booking_line("B1"))["value"]
-    rows = parse_wire(spark.createDataFrame([(line,)], "value string"))
-    idem = str(tmp_path / "sp_idem")
-    route_batch(rows, idem, single_pass=True, batch_id=7)
-    route_batch(rows, idem, single_pass=True, batch_id=7)  # replay
-    bronze = spark.read.parquet(f"{idem}/bronze")
-    assert bronze.count() == 1
-    row = bronze.collect()[0]
-    assert row.batch_id == 7 and row.source_type == "fixed_booking"
-    # source_type is still a prunable hive partition inside the batch dir
-    assert (tmp_path / "sp_idem" / "bronze" / "batch_id=7"
-            / "source_type=fixed_booking").exists()
 
 
 def test_start_router_idempotent_end_to_end(spark, tmp_path):

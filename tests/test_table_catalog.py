@@ -76,6 +76,24 @@ def test_inference_conf_is_part_of_the_key(spark, tmp_path):
         spark.conf.set(conf, old)
 
 
+def test_nanos_events_conf_scoped_to_inference(spark, tmp_path):
+    """A TIMESTAMP(NANOS) ``events`` table loads with ``ts`` floored to
+    microseconds, cold and warm, and the session's conf is unchanged
+    afterwards: the conf that lets inference read nanos holds for the
+    inferring read only."""
+    from pyspark.sql import functions as F
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ts = pa.array([1_500, 2_000_999, 7_000_000_000], pa.timestamp("ns"))
+    pq.write_table(pa.table({"event_id": [1, 2, 3], "ts": ts}), tmp_path / "events.parquet")
+    before = spark.conf.get(conf, None)
+    for _ in range(2):  # inferred, then pinned from the catalog
+        df = load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(conf, None) == before
+        got = sorted(tuple(r) for r in df.select("event_id", F.unix_micros("ts")).collect())
+        assert got == [(1, 1), (2, 2_000), (3, 7_000_000)]
+
+
 def test_uri_path_falls_back_to_inference(spark, tmp_path):
     pq.write_table(pa.table({"k": [7, 8]}), tmp_path / "t.parquet")
     uri = f"file://{tmp_path}"

@@ -3,11 +3,12 @@ router (reference comparison point: the reference producer hard-caps ingest
 at 5 events/s via a 200 ms driver sleep, producer.scala:51).
 
 Drives the router with the rate-micro-batch source (EXACTLY rowsPerBatch
-rows per trigger) mapped onto the wire format, sinks to partitioned parquet
-through the checkpointed foreachBatch router, and reports sustained rows/sec
-as sum(committed batch input rows) / sum(trigger durations) — startup time
-and the in-flight batch discarded at stop() cancel out, which a wall-clock
-quotient does not (measured 7x understatement on a 20 s run).
+rows per trigger) mapped onto the wire format, sinks to the per-entity
+bronze parquet dirs through the checkpointed foreachBatch router, and
+reports sustained rows/sec as sum(committed batch input rows) /
+sum(trigger durations) — startup time and the in-flight batch discarded at
+stop() cancel out, which a wall-clock quotient does not (measured 7x
+understatement on a 20 s run).
 
 Usage: python tools/bench_streaming.py [rows_per_batch] [seconds]
        python tools/bench_streaming.py --stateful [rows_per_batch] [seconds] [n_keys]
@@ -255,7 +256,7 @@ def main() -> int:
         return stateful_main()
     from pyspark.sql import functions as F
 
-    from streamroom_bigdata_spark.schemas import ENTITIES
+    from streamroom_bigdata_spark.schemas import ENTITIES, bronze_schema
     from streamroom_bigdata_spark.session import get_spark
     from streamroom_bigdata_spark.streaming.ingest import parse_wire
     from streamroom_bigdata_spark.streaming.router import start_router
@@ -284,11 +285,15 @@ def main() -> int:
         .option("numPartitions", str(spark.sparkContext.defaultParallelism))
         .load()
     )
-    # rate rows -> synthetic wire JSON, one of the six entity types per row
+    # rate rows -> synthetic wire JSON, one of the six entity types per row;
+    # every entity's dedup key is unique per row except classroom_id (500
+    # rooms), so the router's per-entity key dedup keeps the other rows
+    other_keys = [k for _, k in ENTITIES.values() if k not in ("booking_id", "classroom_id")]
     wire = rate.select(
         F.to_json(
             F.struct(
                 F.concat(F.lit("B"), F.col("value")).alias("booking_id"),
+                *[F.concat(F.lit("K"), F.col("value")).alias(k) for k in other_keys],
                 F.concat(F.lit("C"), F.col("value") % 500).alias("classroom_id"),
                 (F.col("value") % 200 + 5).cast("int").alias("students"),
                 F.element_at(
@@ -309,12 +314,7 @@ def main() -> int:
     load_start = os.getloadavg()
     try:
         t0 = time.time()
-        q = start_router(
-            parse_wire(wire),
-            f"{out_dir}/bronze",
-            f"{out_dir}/ckpt",
-            single_pass=True,
-        )
+        q = start_router(parse_wire(wire), f"{out_dir}/bronze", f"{out_dir}/ckpt")
         time.sleep(run_seconds)
         q.stop()
         q.awaitTermination(60)
@@ -334,10 +334,11 @@ def main() -> int:
         ]
         in_rows = sum(p["numInputRows"] for p in progress)
         busy_ms = sum(p["durationMs"]["triggerExecution"] for p in progress)
-        rows = (
-            spark.read.parquet(f"{out_dir}/bronze").count()
-            if shutil.os.path.isdir(f"{out_dir}/bronze")
-            else 0
+        # rows left after the router's per-entity key dedup
+        rows = sum(
+            spark.read.schema(bronze_schema(e)).parquet(f"{out_dir}/bronze/{e}").count()
+            for e in entities
+            if os.path.isdir(f"{out_dir}/bronze/{e}")
         )
         print(
             json.dumps(
