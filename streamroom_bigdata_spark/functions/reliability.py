@@ -26,9 +26,3 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         return df.checkpoint(eager)
     return df.localCheckpoint(eager)
 
-
-def release(df: DataFrame) -> None:
-    """Free the blocks of a frame returned by :func:`materialize` (its
-    checkpointed RDD), now rather than when the frame is garbage-collected.
-    Reliable checkpoint files stay where the policy above says."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(True)

@@ -15,6 +15,7 @@ entities into its rooms and usage frames.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,8 +26,8 @@ REQUEST_SIZES = (25, 40, 60)  # student counts, processing.scala:120-124
 
 
 def _read_bronze(spark: SparkSession, bronze_dir: str, entity: str) -> DataFrame:
-    """One entity directory, read with the layout the router writes (no
-    schema inference); raises if the entity never arrived."""
+    """One entity directory, read with its bronze schema (the entity's
+    columns, no inference); raises ``PATH_NOT_FOUND`` if it never arrived."""
     return spark.read.schema(bronze_schema(entity)).parquet(f"{bronze_dir}/{entity}")
 
 
@@ -50,11 +51,13 @@ def recommend_classrooms(
     for entity in ("fixed_booking", "one_time_booking"):
         try:
             b = _read_bronze(spark, bronze_dir, entity).select("classroom_id")
-        except Exception:  # entity never arrived on the stream
-            continue
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+            continue  # entity never arrived on the stream
         bookings = b if bookings is None else bookings.unionByName(b)
-    if bookings is None:
-        bookings = spark.createDataFrame([], "classroom_id string")
+    if bookings is None:  # an empty Python list would start Python workers
+        bookings = spark.sql("SELECT CAST(NULL AS STRING) AS classroom_id WHERE false")
 
     usage = (
         bookings.groupBy(F.col("classroom_id").alias("room_id"))

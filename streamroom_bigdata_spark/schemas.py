@@ -12,8 +12,10 @@ Two families:
    here: ``sources.readers.load_table`` infers each table's schema once per
    file version and session confs, then pins it on every later read.
 
-Bronze entity directories are read with :func:`bronze_schema`, the layout
-the streaming router writes, so live reads of the store infer nothing.
+Bronze entity directories are read with :func:`bronze_schema`, the entity's
+columns of the router's files (which carry every wire column but
+``source_type``), so live reads infer nothing; every reader must project
+through it.
 """
 
 from __future__ import annotations
@@ -120,9 +122,9 @@ WIRE_SCHEMA = wire_union_schema()
 
 
 def bronze_schema(entity: str) -> T.StructType:
-    """Layout of one bronze entity directory: the entity's fields with their
-    wire types, plus the ingest stamps. The router projects each micro-batch
-    to it and the domain queries read with it."""
+    """What readers see of one bronze entity directory: the entity's fields
+    with their wire types, plus the ingest stamps. The router's files hold
+    every wire column but ``source_type``; the domain queries read with it."""
     names = [f.name for f in ENTITIES[entity][0].fields]
     names += ["ingestion_timestamp", "ingestion_date"]
     return T.StructType([WIRE_SCHEMA[n] for n in names])

@@ -3,8 +3,10 @@
 A streaming bronze store (streaming/router.py) appends one file batch per
 micro-batch per entity — at production trigger rates that is thousands of
 small files per day, and 100 TB scans die on file-listing and per-file open
-overhead long before they die on bytes. These are the two maintenance
-primitives such a store needs:
+overhead long before they die on bytes. Bronze files carry every wire
+column but ``source_type``; ``compact_parquet_dir`` reads with no pinned
+schema and keeps that width (readers project with ``bronze_schema``).
+These are the two maintenance primitives such a store needs:
 
 - ``compact_parquet_dir``: rewrite a directory to ~target-sized files
   (repartition to ceil(bytes/target) partitions, optionally sorted within

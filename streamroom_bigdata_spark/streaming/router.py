@@ -6,9 +6,10 @@ each time, with no checkpoint (reference: consumer.scala:57-97). This router
 keeps the capability and fixes the anti-patterns (SURVEY.md §4.3):
 
 - ``route_batch`` dedups the whole batch ONCE, on ``(source_type, key)``
-  with each entity's key picked by ``source_type`` (one shuffle, not six),
-  materializes that result eagerly, then writes the six per-entity parquet
-  dirs from it concurrently and releases it.
+  with each entity's key picked by ``source_type``, and writes it with ONE
+  ``partitionBy("source_type")`` job into a staging directory whose part
+  files are then renamed into the per-entity dirs (one shuffle and one
+  write, not six of each).
 - ``start_router`` wires it under ``writeStream.foreachBatch`` WITH a
   checkpoint location, so restarts resume from offsets instead of replaying.
 - Within-batch dedup keeps the reference's per-entity keys
@@ -19,75 +20,72 @@ keeps the capability and fixes the anti-patterns (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-import os
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.reliability import materialize, release
-from ..schemas import ENTITIES, bronze_schema
+from ..schemas import ENTITIES, WIRE_SCHEMA
+from ..sources.maintenance import _fs_path
 
 
 def route_batch(
     batch_df: DataFrame, base_dir: str, batch_id: int | None = None
 ) -> None:
     """Route one micro-batch into the per-entity bronze store: one parquet
-    dir per entity with that entity's columns only — the reference's
-    per-collection layout (consumer.scala:60-94).
+    dir per entity, the reference's per-collection layout
+    (consumer.scala:60-94).
 
-    The batch is deduped once, on ``source_type`` and the entity's key
-    (consumer.scala:61-91: ``booking_id`` for fixed bookings, ``onetime_id``
-    for one-time bookings, ...), so the same key under two entities stays in
-    both. That result is materialized eagerly before the six writes start:
-    the writes run concurrently, and a lazily persisted frame would be
-    computed by whichever writes reach it first. After the writes the
-    materialized blocks are released. With ``spark.checkpoint.dir`` set
-    (reliable mode, see ``functions/reliability``), each batch leaves one
-    checkpoint directory of its deduped rows there, removed only when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.
+    The batch is cast to the wire types and deduped once on ``source_type``
+    and the entity's key (consumer.scala:61-91: ``booking_id`` for fixed
+    bookings, ``onetime_id`` for one-time bookings, ...), so the same key
+    under two entities stays in both. One ``partitionBy("source_type")``
+    overwrite of ``<base_dir>/_staging`` (clearing what an interrupted batch
+    left) writes it; its part files are renamed into ``<base_dir>/<entity>/``
+    and the staging dir deleted. Files keep every wire column but
+    ``source_type`` (readers pin ``schemas.bronze_schema``).
 
-    ``batch_id`` (exactly-once upgrade): when set, each entity's rows land
-    in a ``batch_id=<id>`` partition directory written with OVERWRITE —
-    foreachBatch is only at-least-once (a crash mid-batch replays the batch
-    after restart, and plain appends would then duplicate every entity dir
-    already written), but an overwrite keyed on the checkpoint's monotonic
-    batch id makes the replay IDEMPOTENT: the second attempt replaces the
-    partial first attempt byte-for-byte. Readers see a ``batch_id``
-    partition column (prunable; harmless to entity projections)."""
+    ``batch_id`` (exactly-once upgrade): when set, each entity's files land
+    in a freshly emptied ``batch_id=<id>`` dir — foreachBatch is only
+    at-least-once (a crash mid-batch replays the batch after restart, and
+    plain appends would duplicate what was already moved), but replacing
+    by the checkpoint's monotonic batch id makes the replay IDEMPOTENT.
+    Readers see a ``batch_id`` partition column (prunable; harmless to
+    entity projections)."""
     key = F.expr(
         "CASE source_type "
         + " ".join(f"WHEN '{name}' THEN {col}" for name, (_, col) in ENTITIES.items())
         + " END"
     )
-    deduped = materialize(
-        batch_df.withColumn("_key", key).dropDuplicates(["source_type", "_key"])
+    staging = f"{base_dir}/_staging"
+    (
+        batch_df.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in WIRE_SCHEMA.fields]
+        )
+        .withColumn("_key", key)
+        .dropDuplicates(["source_type", "_key"])
+        .drop("_key")
+        .write.mode("overwrite")
+        # a session-wide dynamic mode would keep a stale staged entity
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("source_type")
+        .parquet(staging)
     )
-    try:
-
-        def write_entity(name):
-            # cast to the bronze layout, so readers can pin its schema (a
-            # no-op on the wire-parsed batch, whose types already match)
-            entity = deduped.filter(F.col("source_type") == name).select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name)
-                  for f in bronze_schema(name).fields]
-            )
-            if batch_id is None:
-                entity.write.mode("append").parquet(os.path.join(base_dir, name))
-            else:
-                entity.write.mode("overwrite").parquet(
-                    os.path.join(base_dir, name, f"batch_id={batch_id}")
-                )
-
-        # the six writes are independent jobs over the materialized batch —
-        # submit them concurrently so executor slots stay busy (the
-        # reference runs them serially AND rescans the source each time)
-        with ThreadPoolExecutor(max_workers=len(ENTITIES)) as pool:
-            for fut in [pool.submit(write_entity, name) for name in ENTITIES]:
-                fut.result()
-    finally:
-        release(deduped)
+    fs, staged, jvm = _fs_path(batch_df.sparkSession, staging)
+    Path = jvm.org.apache.hadoop.fs.Path
+    for name in ENTITIES:
+        src = Path(staged, f"source_type={name}")
+        if not fs.exists(src):
+            continue
+        dst = Path(f"{base_dir}/{name}")
+        if batch_id is not None:
+            dst = Path(dst, f"batch_id={batch_id}")
+            fs.delete(dst, True)
+        fs.mkdirs(dst)
+        for status in fs.listStatus(src):
+            part = status.getPath()
+            if not fs.rename(part, Path(dst, part.getName())):
+                raise IOError(f"bronze router: could not move {part} into {dst}")
+    fs.delete(staged, True)
 
 
 def start_router(
@@ -102,8 +100,8 @@ def start_router(
     consumer.scala:57-97; ours restarts exactly-once-ish).
 
     ``idempotent=True`` upgrades "exactly-once-ish" to exactly-once for
-    the bronze files: each entity write lands in a ``batch_id=<epoch>``
-    partition with overwrite semantics, so a batch REPLAYED after a
+    the bronze files: each entity's files land in a ``batch_id=<epoch>``
+    partition that the batch empties first, so a batch REPLAYED after a
     mid-batch crash replaces its own partial output instead of appending
     a duplicate (see :func:`route_batch`)."""
     writer = (

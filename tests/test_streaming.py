@@ -71,19 +71,23 @@ def test_csv_to_wire_roundtrip(spark, tmp_path):
 
 def test_router_batch_demux_and_dedup(spark, tmp_path):
     """T1/T2 within-batch: six-way demux off one deduped batch, per-entity
-    dedup keys, per-entity column subsets."""
+    dedup keys, per-entity column subsets as the bronze reader sees them."""
+    from streamroom_bigdata_spark.plans.domain import _read_bronze
+
     _write_entity_csvs(tmp_path)
     parsed = parse_wire(entity_dir_to_wire(spark, str(tmp_path)))
     bronze = tmp_path / "bronze_sep"
     route_batch(parsed, str(bronze))
-    fixed = spark.read.parquet(str(bronze / "fixed_booking"))
-    assert fixed.count() == 2  # B2 dup dropped
+    fixed = _read_bronze(spark, str(bronze), "fixed_booking")
     assert "capacity" not in fixed.columns  # entity-specific projection
-    rooms = spark.read.parquet(str(bronze / "classroom"))
-    assert rooms.count() == 2
-    # absent entities write at most an empty dir
-    if (bronze / "courses").exists():
-        assert spark.read.parquet(str(bronze / "courses")).count() == 0
+    # B2 dup dropped; the files' values come through the pinned schema
+    assert sorted((r.booking_id, r.classroom_id, r.students)
+                  for r in fixed.collect()) == [("B1", "C1", 30), ("B2", "C2", 45)]
+    rooms = _read_bronze(spark, str(bronze), "classroom")
+    assert sorted((r.classroom_id, r.capacity) for r in rooms.collect()) == [
+        ("C1", 40), ("C2", 60)]
+    # an absent entity writes no dir, and no staging dir stays behind
+    assert sorted(os.listdir(bronze)) == ["classroom", "fixed_booking"]
 
 
 def _newest_job_id(spark) -> int:
@@ -97,8 +101,9 @@ def _newest_job_id(spark) -> int:
 
 def test_route_batch_dedups_once_and_releases(spark, tmp_path):
     """3,000 rows over five entities, each key sent 1.5 times on average,
-    and the same key value under every entity: one keyed dedup serves all
-    six writes (the per-entity form submitted 17-18 jobs), each entity
+    and the same key value under every entity: one keyed dedup and one
+    partitioned write serve all six entities (the per-entity form submitted
+    17-18 jobs, the pooled writes off a materialized batch 8), each entity
     keeps each of its keys once, a key shared across entities stays in
     each, and nothing stays persisted."""
     entities = ["fixed_booking", "one_time_booking", "classroom", "courses",
@@ -117,7 +122,7 @@ def test_route_batch_dedups_once_and_releases(spark, tmp_path):
     rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     before = _newest_job_id(spark)
     route_batch(batch, bronze)
-    assert _newest_job_id(spark) - before <= 8
+    assert _newest_job_id(spark) - before <= 2
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == rdds
     for e in entities:
         got = spark.read.schema(bronze_schema(e)).parquet(f"{bronze}/{e}")
@@ -128,10 +133,44 @@ def test_route_batch_dedups_once_and_releases(spark, tmp_path):
         assert (row.n, row.keys, row.k1) == (400, 400, 1), e
 
 
+def test_route_batch_leaves_no_reliable_checkpoint(spark, tmp_path,
+                                                  reliable_checkpoints):
+    """With ``spark.checkpoint.dir`` set, routing writes nothing there: a
+    long-running router must not grow the checkpoint dir by one ``rdd-*``
+    per micro-batch."""
+    ckpt = reliable_checkpoints()
+    _write_entity_csvs(tmp_path)
+    parsed = parse_wire(entity_dir_to_wire(spark, str(tmp_path)))
+    for _ in range(2):
+        route_batch(parsed, str(tmp_path / "bronze"))
+    assert not [d for d in os.listdir(ckpt) if d.startswith("rdd-")]
+
+
+def test_route_batch_ignores_and_clears_stale_staging(spark, tmp_path):
+    """A batch interrupted after its staging write leaves
+    ``_staging/source_type=…`` behind; the next batch neither routes those
+    rows nor leaves the directory."""
+    from streamroom_bigdata_spark.plans.domain import _read_bronze
+
+    bronze = tmp_path / "bronze"
+    stale = [{"source_type": "fixed_booking", "booking_id": "STALE"},
+             {"source_type": "courses", "course_id": "STALE"}]  # not in the batch
+    spark.createDataFrame(
+        [tuple(r.get(f.name) for f in WIRE_SCHEMA.fields) for r in stale], WIRE_SCHEMA
+    ).write.partitionBy("source_type").parquet(str(bronze / "_staging"))
+    _write_entity_csvs(tmp_path)
+    route_batch(parse_wire(entity_dir_to_wire(spark, str(tmp_path))), str(bronze))
+    got = sorted(r.booking_id for r in _read_bronze(
+        spark, str(bronze), "fixed_booking").collect())
+    assert got == ["B1", "B2"]
+    assert sorted(os.listdir(bronze)) == ["classroom", "fixed_booking"]
+
+
 def test_recommend_classrooms_planted_store(spark, tmp_path):
     """Hand-scored store: C1 unbooked (free score), C2/C3 an exact tie at
     two bookings each (broken by classroom_id), C4/C5 one booking each, C5
-    too small for either request; no one_time_booking directory at all."""
+    too small for either request; no one_time_booking directory at all,
+    and before the fixed bookings land no booking directory either."""
     from streamroom_bigdata_spark.plans.domain import recommend_classrooms
 
     bronze = tmp_path / "bronze"
@@ -144,6 +183,10 @@ def test_recommend_classrooms_planted_store(spark, tmp_path):
 
     plant("classroom", [{"classroom_id": c, "capacity": cap} for c, cap in
                         [("C1", 30), ("C2", 50), ("C3", 50), ("C4", 80), ("C5", 20)]])
+    got = recommend_classrooms(spark, str(bronze), (25, 60), 4).collect()
+    assert sorted(map(tuple, got)) == [  # every room free: 0.5 + 0.2*1.0
+        (25, "C1", 30, 0.7, 1), (25, "C2", 50, 0.7, 2), (25, "C3", 50, 0.7, 3),
+        (25, "C4", 80, 0.7, 4), (60, "C4", 80, 0.7, 1)]
     plant("fixed_booking", [{"booking_id": f"B{i}", "classroom_id": c} for i, c in
                             enumerate(["C2", "C3", "C2", "C3", "C4", "C5"])])
     got = recommend_classrooms(spark, str(bronze), (25, 60), 4).collect()
@@ -155,6 +198,28 @@ def test_recommend_classrooms_planted_store(spark, tmp_path):
         (25, "C4", 80, 0.75, 3),
         (60, "C4", 80, 0.75, 1),
     ]
+
+
+def test_recommend_classrooms_raises_unreadable_bookings(spark, tmp_path,
+                                                         monkeypatch):
+    """Only a booking entity that never arrived is skipped (the planted
+    store above has no one_time_booking dir): any other failure to read one
+    propagates instead of scoring every room as unbooked."""
+    from streamroom_bigdata_spark.plans import domain
+
+    bronze = str(tmp_path / "bronze")
+    spark.createDataFrame([("C1", 40)], "classroom_id string, capacity int").write.parquet(
+        f"{bronze}/classroom")
+    read = domain._read_bronze
+
+    def read_bookings_from_unknown_fs(spark, bronze_dir, entity):
+        if entity != "classroom":
+            bronze_dir = f"nosuchfs://{bronze_dir}"
+        return read(spark, bronze_dir, entity)
+
+    monkeypatch.setattr(domain, "_read_bronze", read_bookings_from_unknown_fs)
+    with pytest.raises(Exception, match="nosuchfs"):
+        domain.recommend_classrooms(spark, bronze, (25,), 3)
 
 
 def test_streaming_router_end_to_end(spark, tmp_path):

@@ -8,7 +8,6 @@ from __future__ import annotations
 import ast
 import itertools
 import pathlib
-import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -105,10 +104,11 @@ def test_uri_path_falls_back_to_inference(spark, tmp_path):
 
 
 def test_bronze_reads_infer_nothing(spark, tmp_path):
-    """recommend_classrooms reads the bronze store with the router's
-    layout: building it submits no schema-inference job, and an entity that
-    never arrived is still skipped."""
-    from streamroom_bigdata_spark.plans.domain import recommend_classrooms
+    """recommend_classrooms reads the bronze store through the pinned
+    bronze schema: the entity's own columns and values come out of the
+    router's files, building the query submits no schema-inference job, and
+    an entity that never arrived is still skipped."""
+    from streamroom_bigdata_spark.plans.domain import _read_bronze, recommend_classrooms
     from streamroom_bigdata_spark.streaming.router import route_batch
 
     rows = [
@@ -121,8 +121,11 @@ def test_bronze_reads_infer_nothing(spark, tmp_path):
     )
     bronze = str(tmp_path / "bronze")
     route_batch(batch, bronze)
-    shutil.rmtree(f"{bronze}/one_time_booking", ignore_errors=True)
-    assert spark.read.parquet(f"{bronze}/classroom").schema == bronze_schema("classroom")
+    assert not pathlib.Path(bronze, "one_time_booking").exists()
+    rooms = _read_bronze(spark, bronze, "classroom")
+    assert rooms.columns == bronze_schema("classroom").names
+    assert sorted(map(tuple, rooms.collect())) == [
+        ("C1", None, None, 40, None, None), ("C2", None, None, 60, None, None)]
     df, jobs = _jobs(spark, lambda: recommend_classrooms(spark, bronze, (50,), 3))
     assert jobs == 0
     assert [(r.classroom_id, r.rnk) for r in df.collect()] == [("C2", 1)]

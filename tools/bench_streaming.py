@@ -8,7 +8,9 @@ bronze parquet dirs through the checkpointed foreachBatch router, and
 reports sustained rows/sec as sum(committed batch input rows) /
 sum(trigger durations) — startup time and the in-flight batch discarded at
 stop() cancel out, which a wall-clock quotient does not (measured 7x
-understatement on a 20 s run).
+understatement on a 20 s run). It runs the router's ``idempotent=True``
+path, not the default append, so ``rows_in_bronze`` can count only the
+``batch_id=<id>`` dirs of committed batches.
 
 Usage: python tools/bench_streaming.py [rows_per_batch] [seconds]
        python tools/bench_streaming.py --stateful [rows_per_batch] [seconds] [n_keys]
@@ -314,29 +316,18 @@ def main() -> int:
     load_start = os.getloadavg()
     try:
         t0 = time.time()
-        q = start_router(parse_wire(wire), f"{out_dir}/bronze", f"{out_dir}/ckpt")
-        time.sleep(run_seconds)
-        q.stop()
-        q.awaitTermination(60)
+        q = start_router(parse_wire(wire), f"{out_dir}/bronze", f"{out_dir}/ckpt",
+                         idempotent=True)
+        stats = _drain(q, run_seconds)
         elapsed = time.time() - t0
-        # Active window = first trigger start -> stop: session+stream
-        # startup (~8 s) must not count against throughput. Short runs
-        # additionally lose the in-flight batch at stop() (its rows are
-        # uncommitted but its time elapsed) — measured as a 7x understate
-        # on a 20 s run vs 40 s; run >= 40 s for a stable number.
-        # committed batches only: every batch is exactly rows_per_batch, so
-        # sum(inputRows)/sum(triggerExecution) is the router's sustained
-        # rate, independent of startup and the discarded in-flight batch
-        progress = [
-            p
-            for p in q.recentProgress
-            if p is not None and p.get("numInputRows", 0) > 0
-        ]
-        in_rows = sum(p["numInputRows"] for p in progress)
-        busy_ms = sum(p["durationMs"]["triggerExecution"] for p in progress)
-        # rows left after the router's per-entity key dedup
+        # rows left after the router's per-entity key dedup, in the batches
+        # the progress log reports; the batch stop() interrupts may have
+        # written files without committing
+        committed = [p["batchId"] for p in q.recentProgress
+                     if p is not None and p.get("numInputRows", 0) > 0]
         rows = sum(
-            spark.read.schema(bronze_schema(e)).parquet(f"{out_dir}/bronze/{e}").count()
+            spark.read.schema(bronze_schema(e)).parquet(f"{out_dir}/bronze/{e}")
+            .filter(F.col("batch_id").isin(committed)).count()
             for e in entities
             if os.path.isdir(f"{out_dir}/bronze/{e}")
         )
@@ -344,13 +335,13 @@ def main() -> int:
             json.dumps(
                 {
                     "metric": "streaming_router_throughput",
-                    "value": round(in_rows / max(busy_ms / 1000.0, 0.001), 1),
+                    "value": stats["events_per_sec"],
                     "unit": "events/sec",
-                    "rows_committed": in_rows,
+                    "rows_committed": stats["rows_committed"],
                     "rows_in_bronze": rows,
                     "elapsed_sec": round(elapsed, 1),
-                    "busy_sec": round(busy_ms / 1000.0, 1),
-                    "n_batches": len(progress),
+                    "busy_sec": stats["busy_sec"],
+                    "n_batches": stats["n_batches"],
                     "rows_per_batch": rows_per_batch,
                     "loadavg_start": [round(x, 2) for x in load_start],
                     "loadavg_end": [round(x, 2) for x in os.getloadavg()],
