@@ -33,6 +33,7 @@ exist to be broadcast or coalesced anyway.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _ARROW_DTYPES = {
@@ -73,7 +74,11 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     else:
         struct = schema
     if not rows:
-        return spark.createDataFrame([], struct)
+        # an empty createDataFrame is a LogicalRDD that still starts Python
+        # workers to scan nothing; this optimizes to an empty LocalRelation
+        return spark.range(1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in struct.fields]
+        ).where(F.lit(False))
 
     dtypes = [_ARROW_DTYPES.get(repr(f.dataType)) for f in struct.fields]
     if all(d is not None for d in dtypes) and all(

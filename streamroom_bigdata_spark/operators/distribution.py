@@ -203,7 +203,7 @@ def ks_two_sample_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # literal 0.0 (ANSI abort on Spark, inf on DuckDB). Both classes
     # absent → the oracle's cross join is empty → empty frame here too.
     if n_a == 0 and n_b == 0:
-        return spark.createDataFrame([], "n_a long, n_b long, ks_stat double")
+        return local_df(spark, [], "n_a long, n_b long, ks_stat double")
     if n_a == 0 or n_b == 0:
         return spark.createDataFrame(
             [(n_a, n_b, None)], "n_a long, n_b long, ks_stat double"

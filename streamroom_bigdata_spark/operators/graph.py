@@ -114,7 +114,7 @@ def pagerank(
     if n_edges == 0:
         # empty graph → empty labeling (1.0/n would divide by zero)
         spark = edges.sparkSession
-        return spark.createDataFrame([], "id long, rank double")
+        return local_df(spark, [], "id long, rank double")
     if n_edges <= small_graph_threshold:
         return _driver_pagerank(edges, iters, damping, mirror)
     if mirror:
@@ -328,7 +328,7 @@ def personalized_pagerank(
     n_edges = edges.count() * (2 if mirror else 1)
     if n_edges == 0:
         spark = edges.sparkSession
-        return spark.createDataFrame([], "id long, rank double")
+        return local_df(spark, [], "id long, rank double")
     if n_edges <= small_graph_threshold:
         return _driver_ppr(edges, seed_sql, iters, damping, mirror)
     if mirror:
@@ -342,7 +342,7 @@ def personalized_pagerank(
     s_count = nodes.filter(F.expr(seed_sql)).count()  # scalar loop constant
     if s_count == 0:
         spark = edges.sparkSession
-        return spark.createDataFrame([], "id long, rank double")
+        return local_df(spark, [], "id long, rank double")
     seed = F.expr(seed_sql)
     base = nodes.select(
         "id",
@@ -420,7 +420,7 @@ def _driver_ppr(
     mask = np.isin(ids, seed_ids)
     s = float(mask.sum())
     if s == 0:
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     base = (1.0 - damping) / s * mask
     rank = mask / s
     for _ in range(iters):
@@ -701,7 +701,7 @@ def k_core(
     )
     n_edges = edges.count()
     if n_edges == 0:
-        return spark.createDataFrame([], "id long, core_degree long")
+        return local_df(spark, [], "id long, core_degree long")
     if n_edges <= small_graph_threshold:
         return _driver_k_core(edges, k)
 
@@ -717,7 +717,7 @@ def k_core(
             .join(bad.select(F.col("u").alias("v")), "v", "left_anti")
         )
         if edges.isEmpty():
-            return spark.createDataFrame([], "id long, core_degree long")
+            return local_df(spark, [], "id long, core_degree long")
     raise RuntimeError(
         f"k_core: peel did not converge within {max_rounds} rounds"
     )

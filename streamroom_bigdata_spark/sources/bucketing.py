@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .maintenance import _fs_path
 from .readers import load_table
 
 
@@ -29,9 +30,7 @@ def _clear_stale_location(spark: SparkSession, table: str) -> None:
     callers must not run two processes materializing the same table
     concurrently (same rule as any non-transactional table format)."""
     wh = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(wh, table.lower())
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, path, _ = _fs_path(spark, f"{wh}/{table.lower()}")
     if fs.exists(path):
         fs.delete(path, True)
 

@@ -1,4 +1,5 @@
-"""Table-maintenance operators: compaction and keyed upsert.
+"""Table-maintenance operators: compaction, clustered layouts and the
+partition-scoped upsert.
 
 A streaming bronze store (streaming/router.py) appends one file batch per
 micro-batch per entity — at production trigger rates that is thousands of
@@ -6,20 +7,19 @@ small files per day, and 100 TB scans die on file-listing and per-file open
 overhead long before they die on bytes. Bronze files carry every wire
 column but ``source_type``; ``compact_parquet_dir`` reads with no pinned
 schema and keeps that width (readers project with ``bronze_schema``).
-These are the two maintenance primitives such a store needs:
 
 - ``compact_parquet_dir``: rewrite a directory to ~target-sized files
   (repartition to ceil(bytes/target) partitions, optionally sorted within
   partitions so downstream range predicates get row-group pruning).
-- ``upsert_parquet``: key-based merge of an updates frame into a stored
-  table — anti-join out the replaced rows, union the updates, atomic swap.
-  This is the no-dependency emulation of what Delta/Iceberg ``MERGE`` does
-  with transaction-log atomicity; the write-to-temp + rename here is atomic
-  only per-directory on a local/HDFS-like filesystem (documented trade; on
-  a real deployment you'd put Delta under the same call signature).
+- ``write_range_partitioned`` / ``write_zordered``: layouts whose file
+  min/max statistics let range predicates skip files.
+- ``upsert_partitioned``: keyed merge that rewrites only the partitions an
+  update touches (the silver rollup sink, streaming/silver.py).
 
-Both are pure DataFrame plans — the shuffle moves data once, nothing flows
-through the driver.
+The whole-table keyed upsert and its CDC sink are manifest-committed:
+``manifest_upsert`` / ``streaming_manifest_upsert_sink`` in
+manifest_table.py. All of these are pure DataFrame plans — the shuffle
+moves data once, nothing flows through the driver.
 """
 
 from __future__ import annotations
@@ -32,14 +32,13 @@ from pyspark.sql import functions as F
 from ..functions.reliability import materialize
 
 
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes under ``path`` via the Hadoop FileSystem API (works for
-    any supported scheme, not just file://)."""
+def _fs_path(spark: SparkSession, p: str):
+    """(Hadoop FileSystem, Path, JVM) for ``p`` — works for any supported
+    scheme, not just file://."""
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    return fs.getContentSummary(p).getLength()
+    path = jvm.org.apache.hadoop.fs.Path(p)
+    return path.getFileSystem(hconf), path, jvm
 
 
 def compact_parquet_dir(
@@ -54,106 +53,14 @@ def compact_parquet_dir(
     (no global sort) so parquet row-group min/max stats serve range
     predicates afterward."""
     df = spark.read.parquet(src_dir)
-    n_files = max(1, math.ceil(_dir_bytes(spark, src_dir) / target_file_bytes))
+    fs, path, _ = _fs_path(spark, src_dir)
+    n_bytes = fs.getContentSummary(path).getLength()
+    n_files = max(1, math.ceil(n_bytes / target_file_bytes))
     out = df.repartition(n_files)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     out.write.mode("overwrite").parquet(dst_dir)
     return n_files
-
-
-def _fs_path(spark: SparkSession, p: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(p)
-    return path.getFileSystem(hconf), path, jvm
-
-
-def recover_upsert(spark: SparkSession, table_dir: str) -> bool:
-    """Crash recovery for :func:`upsert_parquet`: if a previous swap died
-    between its two renames, the table lives at ``__upsert_old`` — move it
-    back. A stale ``__upsert_tmp`` (died before/during the tmp write) is
-    deleted. Returns True if anything was repaired. Called automatically by
-    upsert_parquet and the streaming sink, so a checkpoint replay after a
-    crash resumes instead of mistaking the swap gap for an empty table."""
-    fs, path, jvm = _fs_path(spark, table_dir)
-    tmp = jvm.org.apache.hadoop.fs.Path(table_dir + "__upsert_tmp")
-    old = jvm.org.apache.hadoop.fs.Path(table_dir + "__upsert_old")
-    repaired = False
-    if fs.exists(old):
-        if fs.exists(path):
-            fs.delete(old, True)  # swap completed; old is leftover
-        else:
-            fs.rename(old, path)  # died mid-swap: restore
-        repaired = True
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-        repaired = True
-    return repaired
-
-
-def upsert_parquet(
-    spark: SparkSession, table_dir: str, updates: DataFrame, key: str
-) -> None:
-    """Merge ``updates`` into the parquet table at ``table_dir`` by ``key``:
-    rows whose key appears in ``updates`` are replaced, new keys appended.
-    The merge is written to a sibling temp dir first, so readers never see
-    partial DATA; the two-rename swap does leave a brief window where the
-    directory is absent (single-rename atomicity needs a manifest layer —
-    Delta/Iceberg — which this module deliberately stays below). Stale
-    tmp/old dirs from a crashed previous call are repaired first, so a
-    crash at any point is recoverable (tested)."""
-    recover_upsert(spark, table_dir)
-    current = spark.read.parquet(table_dir)
-    merged = current.join(
-        updates.select(key).distinct(), key, "left_anti"
-    ).unionByName(updates.select(*current.columns))
-
-    fs, path, jvm = _fs_path(spark, table_dir)
-    tmp = jvm.org.apache.hadoop.fs.Path(table_dir + "__upsert_tmp")
-    old = jvm.org.apache.hadoop.fs.Path(table_dir + "__upsert_old")
-
-    merged.write.mode("overwrite").parquet(tmp.toString())
-    if not fs.rename(path, old):
-        raise IOError(f"upsert swap failed: could not move {table_dir} aside")
-    if not fs.rename(tmp, path):
-        fs.rename(old, path)  # roll back
-        raise IOError(f"upsert swap failed: could not move new data into place")
-    fs.delete(old, True)
-
-
-def streaming_upsert_sink(table_dir: str, key: str, ts_col: str | None = None):
-    """foreachBatch function applying each micro-batch as an upsert — the
-    CDC-consumer pattern. Pass ``ts_col`` to make latest-wins deterministic
-    within a batch (highest ts kept per key); without it, duplicate keys in
-    one batch keep an arbitrary row (dropDuplicates semantics)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if ts_col is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(key).orderBy(F.desc(ts_col))
-            deduped = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        else:
-            deduped = batch_df.dropDuplicates([key])
-        # repair any crashed swap BEFORE interpreting PATH_NOT_FOUND as
-        # "first batch" — otherwise a replay could clobber the whole table
-        # with one batch's rows
-        recover_upsert(spark, table_dir)
-        try:
-            upsert_parquet(spark, table_dir, deduped, key)
-        except Exception as exc:
-            if "Path does not exist" in str(exc) or "PATH_NOT_FOUND" in str(exc):
-                deduped.write.mode("overwrite").parquet(table_dir)
-            else:
-                raise
-
-    return apply
 
 
 def write_range_partitioned(
@@ -244,23 +151,21 @@ def upsert_partitioned(
     ``updates`` are read, merged, and replaced (dynamic partition
     overwrite). Per-call cost is proportional to the touched partitions,
     not the table — the property a long-running incremental sink needs
-    (contrast :func:`upsert_parquet`, which rewrites the whole table).
-    Untouched partition directories are not rewritten (asserted against
-    file mtimes in tests).
+    (contrast ``manifest_table.manifest_upsert``, which rewrites the whole
+    table). Untouched partition directories are not rewritten (asserted
+    against file mtimes in tests).
 
     CONSTRAINT: ``part_col`` must be a pure function of ``key`` (as it is
     for the silver sink's wkey→window_date). If a key could reappear with
     a DIFFERENT partition value, its stale row in the old (untouched)
     partition would survive the merge and the key would exist twice. When
     partitions can move, anti-join the update keys against the whole
-    table instead (:func:`upsert_parquet`)."""
-    try:
-        current = spark.read.parquet(table_dir)
-    except Exception as exc:
-        if "Path does not exist" in str(exc) or "PATH_NOT_FOUND" in str(exc):
-            updates.write.partitionBy(part_col).parquet(table_dir)
-            return
-        raise
+    table instead (``manifest_upsert``)."""
+    fs, path, _ = _fs_path(spark, table_dir)
+    if not fs.exists(path):  # first batch; any other read error propagates
+        updates.write.partitionBy(part_col).parquet(table_dir)
+        return
+    current = spark.read.parquet(table_dir)
     touched = [r[0] for r in updates.select(part_col).distinct().collect()]
     # materializing the touched slice means the subsequent
     # overwrite of the same path doesn't read-and-write one location in a

@@ -1,9 +1,10 @@
-"""Manifest-committed parquet tables: a minimal transaction log.
+"""Manifest-committed parquet tables: a minimal transaction log, and the
+one keyed upsert (``manifest_upsert``) and CDC sink
+(``streaming_manifest_upsert_sink``) of the package.
 
-``upsert_parquet`` (maintenance.py) swaps the table directory with two
-renames, which leaves a brief window where the path is absent and is only
-rename-atomic on local/HDFS-like filesystems. This module removes that
-window with the commit-log idea Delta/Iceberg use, reduced to its minimum:
+Rewriting a table directory in place leaves a moment where the path is
+absent or torn. This module never has one: it uses the commit-log idea
+Delta/Iceberg use, reduced to its minimum:
 
     table_dir/
       data/gen-<n>-<uuid>/part-*.parquet   immutable generation data
@@ -35,18 +36,14 @@ from __future__ import annotations
 import json
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from .maintenance import _fs_path
 
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed this generation first."""
-
-
-def _fs(spark: SparkSession, p: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(p)
-    return path.getFileSystem(hconf), jvm
 
 
 def _manifest_dir(table_dir: str) -> str:
@@ -55,8 +52,7 @@ def _manifest_dir(table_dir: str) -> str:
 
 def _list_commits(spark: SparkSession, table_dir: str) -> list[tuple[int, str]]:
     """Sorted (generation, manifest path) pairs; [] for an empty table."""
-    fs, jvm = _fs(spark, table_dir)
-    mdir = jvm.org.apache.hadoop.fs.Path(_manifest_dir(table_dir))
+    fs, mdir, _ = _fs_path(spark, _manifest_dir(table_dir))
     if not fs.exists(mdir):
         return []
     out = []
@@ -71,14 +67,10 @@ def _list_commits(spark: SparkSession, table_dir: str) -> list[tuple[int, str]]:
 
 
 def _read_manifest(spark: SparkSession, manifest_path: str) -> dict:
-    fs, jvm = _fs(spark, manifest_path)
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(manifest_path))
+    fs, path, jvm = _fs_path(spark, manifest_path)
+    stream = fs.open(path)
     try:
-        data = bytes(
-            spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                stream
-            )
-        )
+        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
     return json.loads(data.decode("utf-8"))
@@ -89,9 +81,9 @@ def _commit(
 ) -> None:
     """Atomically publish ``record`` as commit ``generation`` via
     write-temp + rename-if-absent. The rename IS the commit point."""
-    fs, jvm = _fs(spark, table_dir)
     mdir = _manifest_dir(table_dir)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(mdir))
+    fs, mdir_path, jvm = _fs_path(spark, mdir)
+    fs.mkdirs(mdir_path)
     tmp = jvm.org.apache.hadoop.fs.Path(
         f"{mdir}/.tmp-{uuid.uuid4().hex}.json"
     )
@@ -120,13 +112,32 @@ def _stage_generation(
     pure footer-scan overhead on every manifest commit (3 such jobs per
     committed ANN index build)."""
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     data_dir = f"{table_dir}/data/gen-{generation}-{uuid.uuid4().hex[:8]}"
     obs = Observation(f"stage-gen-{uuid.uuid4().hex[:8]}")
     # fresh dir — no overwrite semantics needed
     df.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.parquet(data_dir)
     return data_dir, int(obs.get["n_rows"])
+
+
+def _stage_and_commit(
+    spark: SparkSession,
+    table_dir: str,
+    df: DataFrame,
+    read_gen: int | None,
+    extra: dict | None = None,
+) -> int:
+    """Stage ``df`` and commit it as the generation after ``read_gen``,
+    the newest generation the caller read (None: the table was empty).
+    Returns the new generation. If another writer committed that
+    generation since the caller's read, the commit raises
+    ConcurrentCommitError and the staged dir is left for vacuum."""
+    gen = 0 if read_gen is None else read_gen + 1
+    data_dir, n_rows = _stage_generation(df, table_dir, gen)
+    rec = dict(extra or {})
+    rec.update({"generation": gen, "data_dir": data_dir, "n_rows": n_rows})
+    _commit(spark, table_dir, gen, rec)
+    return gen
 
 
 def manifest_write(
@@ -137,13 +148,9 @@ def manifest_write(
     ``extra`` merges application metadata into the commit record (e.g. a
     streaming sink's last-applied batch_id — the Delta txn-version idea),
     readable back via ``manifest_history``; reserved keys are ignored."""
-    commits = _list_commits(spark, table_dir)
-    gen = commits[-1][0] + 1 if commits else 0
-    data_dir, n_rows = _stage_generation(df, table_dir, gen)
-    rec = dict(extra or {})
-    rec.update({"generation": gen, "data_dir": data_dir, "n_rows": n_rows})
-    _commit(spark, table_dir, gen, rec)
-    return gen
+    return _stage_and_commit(
+        spark, table_dir, df, manifest_generation(spark, table_dir), extra
+    )
 
 
 def _generation_dirs(rec: dict) -> list[str]:
@@ -161,28 +168,36 @@ def manifest_read(
     still-vacuum-retained generation readable, the Delta/Iceberg
     ``VERSION AS OF`` capability). Raises on a generation that was never
     committed or whose data a vacuum already reclaimed."""
+    _, dirs = _live_generation(spark, table_dir, generation)
+    return spark.read.parquet(*dirs)
+
+
+def _live_generation(
+    spark: SparkSession, table_dir: str, generation: int | None = None
+) -> tuple[dict, list[str]]:
+    """(commit record, data dirs) of ``generation``, the newest by
+    default. Raises FileNotFoundError on an empty table, a generation that
+    was never committed, or one whose data a vacuum already reclaimed."""
     commits = _list_commits(spark, table_dir)
     if not commits:
         raise FileNotFoundError(f"no committed generation in {table_dir}")
+    by_gen = dict(commits)
     if generation is None:
-        rec = _read_manifest(spark, commits[-1][1])
-    else:
-        by_gen = dict(commits)
-        if generation not in by_gen:
-            raise FileNotFoundError(
-                f"generation {generation} not in manifest for {table_dir} "
-                f"(have {sorted(by_gen)}; older ones may be vacuumed)"
-            )
-        rec = _read_manifest(spark, by_gen[generation])
+        generation = commits[-1][0]
+    elif generation not in by_gen:
+        raise FileNotFoundError(
+            f"generation {generation} not in manifest for {table_dir} "
+            f"(have {sorted(by_gen)}; older ones may be vacuumed)"
+        )
+    rec = _read_manifest(spark, by_gen[generation])
     dirs = _generation_dirs(rec)
-    fs, jvm = _fs(spark, dirs[0])
+    fs, _, jvm = _fs_path(spark, dirs[0])
     for d in dirs:
         if not fs.exists(jvm.org.apache.hadoop.fs.Path(d)):
             raise FileNotFoundError(
-                f"generation {rec['generation']} data was vacuumed from "
-                f"{table_dir}"
+                f"generation {generation} data was vacuumed from {table_dir}"
             )
-    return spark.read.parquet(*dirs)
+    return rec, dirs
 
 
 def manifest_append(
@@ -252,10 +267,10 @@ def manifest_upsert(
     with ``evolve_schema=True``, a new column is null-filled on the other
     side, which is exactly parquet-compatible schema evolution (old data
     files simply lack the column)."""
-    commits = _list_commits(spark, table_dir)
-    if not commits:
-        return manifest_write(spark, table_dir, updates)
-    current = manifest_read(spark, table_dir)
+    read_gen = manifest_generation(spark, table_dir)
+    if read_gen is None:
+        return _stage_and_commit(spark, table_dir, updates, None)
+    current = manifest_read(spark, table_dir, read_gen)
     added = set(updates.columns) - set(current.columns)
     if added and not evolve_schema:
         raise ValueError(
@@ -265,13 +280,7 @@ def manifest_upsert(
     merged = current.join(
         updates.select(key).distinct(), key, "left_anti"
     ).unionByName(updates, allowMissingColumns=True)
-    gen = commits[-1][0] + 1
-    data_dir, n_rows = _stage_generation(merged, table_dir, gen)
-    _commit(
-        spark, table_dir, gen,
-        {"generation": gen, "data_dir": data_dir, "n_rows": n_rows},
-    )
-    return gen
+    return _stage_and_commit(spark, table_dir, merged, read_gen)
 
 
 def manifest_upsert_occ(
@@ -305,18 +314,11 @@ def manifest_delete(
     copy-on-write delete Delta/Iceberg perform, without deletion-vector
     machinery. Time travel keeps the pre-delete generations readable until
     vacuumed."""
-    commits = _list_commits(spark, table_dir)
-    if not commits:
-        raise FileNotFoundError(f"no committed generation in {table_dir}")
-    current = manifest_read(spark, table_dir)
-    remaining = current.join(keys.select(key).distinct(), key, "left_anti")
-    gen = commits[-1][0] + 1
-    data_dir, n_rows = _stage_generation(remaining, table_dir, gen)
-    _commit(
-        spark, table_dir, gen,
-        {"generation": gen, "data_dir": data_dir, "n_rows": n_rows},
+    read_gen = manifest_generation(spark, table_dir)
+    remaining = manifest_read(spark, table_dir, read_gen).join(
+        keys.select(key).distinct(), key, "left_anti"
     )
-    return gen
+    return _stage_and_commit(spark, table_dir, remaining, read_gen)
 
 
 def manifest_clone(spark: SparkSession, src_dir: str, dst_dir: str) -> None:
@@ -332,9 +334,8 @@ def manifest_clone(spark: SparkSession, src_dir: str, dst_dir: str) -> None:
     table's ``data/``, so vacuuming a clone cannot reclaim source files
     (vacuuming the SOURCE can orphan a clone — the same caveat Delta
     documents; keep sources un-vacuumed while clones live)."""
-    fs, jvm = _fs(spark, src_dir)
-    dst_mdir = _manifest_dir(dst_dir)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(dst_mdir))
+    fs, dst_mdir, _ = _fs_path(spark, _manifest_dir(dst_dir))
+    fs.mkdirs(dst_mdir)
     for gen, p in _list_commits(spark, src_dir):
         rec = _read_manifest(spark, p)
         _commit(spark, dst_dir, gen, rec)
@@ -354,24 +355,8 @@ def manifest_restore(
     escape hatch every commit-log table owes its operators. Raises if
     the generation was never committed or is already vacuumed. Returns
     the new generation."""
-    commits = _list_commits(spark, table_dir)
-    if not commits:
-        raise FileNotFoundError(f"no committed generation in {table_dir}")
-    by_gen = dict(commits)
-    if generation not in by_gen:
-        raise FileNotFoundError(
-            f"generation {generation} not in manifest for {table_dir} "
-            f"(have {sorted(by_gen)})"
-        )
-    target = _read_manifest(spark, by_gen[generation])
-    dirs = _generation_dirs(target)
-    fs, jvm = _fs(spark, dirs[0])
-    for d in dirs:
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(d)):
-            raise FileNotFoundError(
-                f"generation {generation} data was vacuumed from {table_dir}"
-            )
-    gen = commits[-1][0] + 1
+    target, dirs = _live_generation(spark, table_dir, generation)
+    gen = manifest_generation(spark, table_dir) + 1
     _commit(
         spark, table_dir, gen,
         {
@@ -393,17 +378,9 @@ def manifest_compact(
     another commit, it is atomic, concurrent-reader-safe, and undoable via
     time travel; the small-file debt of many upsert generations is paid
     without a maintenance window."""
-    commits = _list_commits(spark, table_dir)
-    if not commits:
-        raise FileNotFoundError(f"no committed generation in {table_dir}")
-    current = manifest_read(spark, table_dir).coalesce(n_files)
-    gen = commits[-1][0] + 1
-    data_dir, n_rows = _stage_generation(current, table_dir, gen)
-    _commit(
-        spark, table_dir, gen,
-        {"generation": gen, "data_dir": data_dir, "n_rows": n_rows},
-    )
-    return gen
+    read_gen = manifest_generation(spark, table_dir)
+    current = manifest_read(spark, table_dir, read_gen).coalesce(n_files)
+    return _stage_and_commit(spark, table_dir, current, read_gen)
 
 
 def manifest_diff(
@@ -414,8 +391,6 @@ def manifest_diff(
     or 'delete' (present only in ``from_gen``); an updated row appears as
     its delete + insert pair. Incremental consumers read this instead of
     rescanning the table."""
-    from pyspark.sql import functions as F
-
     old = manifest_read(spark, table_dir, generation=from_gen)
     new = manifest_read(spark, table_dir, generation=to_gen)
     # align schemas across an evolution boundary: a column absent in one
@@ -460,8 +435,6 @@ def incremental_agg(
     rebuilding it. Counts and integer sums are exact; floating sums drift
     from a recompute by normal summation reordering.
     """
-    from pyspark.sql import functions as F
-
     sum_cols = sum_cols or {}
     sign = F.when(F.col("_change") == "insert", F.lit(1)).otherwise(F.lit(-1))
     delta = changes.groupBy(*keys).agg(
@@ -523,7 +496,7 @@ def manifest_vacuum(
     """Delete data dirs (and manifests) older than the newest ``keep``
     generations, plus orphaned data dirs no manifest references (crashed
     stages). Returns the number of directories removed."""
-    fs, jvm = _fs(spark, table_dir)
+    fs, _, jvm = _fs_path(spark, table_dir)
     commits = _list_commits(spark, table_dir)
     live = commits[-keep:] if keep > 0 else []
     # qualify through the filesystem so "file:/x" and "/x" compare equal;
@@ -547,14 +520,28 @@ def manifest_vacuum(
     return removed
 
 
-def streaming_manifest_upsert_sink(table_dir: str, key: str):
+def streaming_manifest_upsert_sink(
+    table_dir: str, key: str, ts_col: str | None = None
+):
     """foreachBatch sink applying each micro-batch as a manifest-committed
-    upsert — the crash-safe successor of streaming_upsert_sink: a batch
-    replay after a crash re-merges idempotently (same keys replace
-    themselves), and readers never observe a partial batch."""
+    upsert — the CDC-consumer pattern. Each batch is first deduplicated on
+    ``key``, so no key is ever stored twice: with ``ts_col`` the row with
+    the highest ``ts_col`` wins per key, without it an arbitrary one
+    (dropDuplicates). A batch replay after a crash re-merges idempotently
+    (same keys replace themselves), and readers never observe a partial
+    batch."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        manifest_upsert(batch_df.sparkSession, table_dir, batch_df, key)
+        if ts_col is None:
+            deduped = batch_df.dropDuplicates([key])
+        else:
+            w = Window.partitionBy(key).orderBy(F.desc(ts_col))
+            deduped = (
+                batch_df.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+        manifest_upsert(batch_df.sparkSession, table_dir, deduped, key)
 
     return apply
 
@@ -592,8 +579,6 @@ def incremental_join(
     recompute this replaces is the full A ⋈ B. Equality with recompute is
     property-tested across multi-commit histories, including same-window
     changes on both sides."""
-    from pyspark.sql import functions as F
-
     sign = F.when(F.col("_change") == "insert", F.lit(1)).otherwise(F.lit(-1))
     a_cols = [c for c in a_old.columns]
     b_extra = [c for c in b_old.columns if c not in on]

@@ -1,4 +1,4 @@
-"""Compaction and upsert maintenance operators."""
+"""Compaction, layout and upsert maintenance operators, and the CDC sink."""
 
 from __future__ import annotations
 
@@ -6,10 +6,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from streamroom_bigdata_spark.sources.maintenance import (
-    compact_parquet_dir,
-    streaming_upsert_sink,
-    upsert_parquet,
+from streamroom_bigdata_spark.sources.maintenance import compact_parquet_dir
+from streamroom_bigdata_spark.sources.manifest_table import (
+    manifest_read,
+    streaming_manifest_upsert_sink,
 )
 
 
@@ -50,40 +50,16 @@ def test_compaction_sort_within_partitions_gives_rowgroup_stats(spark, tmp_path)
     assert got == sorted(got)
 
 
-def test_upsert_replaces_and_appends(spark, tmp_path):
-    table = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"
-    ).write.parquet(table)
-    updates = spark.createDataFrame([(2, "B2"), (4, "d")], "k int, v string")
-    upsert_parquet(spark, table, updates, "k")
-    got = dict((r.k, r.v) for r in spark.read.parquet(table).collect())
-    assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
-
-
 def test_streaming_upsert_sink_cdc(spark, tmp_path):
     """CDC pattern: each micro-batch upserts; last state per key wins."""
     table = str(tmp_path / "cdc_tbl")
-    sink = streaming_upsert_sink(table, "k")
+    sink = streaming_manifest_upsert_sink(table, "k")
     b0 = spark.createDataFrame([(1, "a0"), (2, "b0")], "k int, v string")
     b1 = spark.createDataFrame([(2, "b1"), (3, "c1")], "k int, v string")
     sink(b0, 0)
     sink(b1, 1)
-    got = dict((r.k, r.v) for r in spark.read.parquet(table).collect())
+    got = dict((r.k, r.v) for r in manifest_read(spark, table).collect())
     assert got == {1: "a0", 2: "b1", 3: "c1"}
-
-
-def test_streaming_upsert_sink_idempotent_on_batch_replay(spark, tmp_path):
-    """foreachBatch redelivery (failure/restart) must not corrupt the table:
-    applying the same batch twice is a no-op — keyed upsert is idempotent."""
-    table = str(tmp_path / "replay_tbl")
-    sink = streaming_upsert_sink(table, "k")
-    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    sink(b0, 0)
-    once = sorted(map(tuple, spark.read.parquet(table).collect()))
-    sink(b0, 0)  # redelivery of the same batch
-    twice = sorted(map(tuple, spark.read.parquet(table).collect()))
-    assert once == twice == [(1, "a"), (2, "b")]
 
 
 def test_range_partitioned_write_disjoint_file_stats(spark, tmp_path):
@@ -118,34 +94,31 @@ def test_range_partitioned_write_disjoint_file_stats(spark, tmp_path):
     assert spark.read.parquet(dst).count() == 10_000
 
 
-def test_upsert_recovers_from_mid_swap_crash(spark, tmp_path):
-    """Simulate dying between the two swap renames (table moved aside, new
-    data never moved in): the next upsert must restore the table and apply
-    normally — NOT mistake the gap for an empty table."""
-    import os
-
-    table = str(tmp_path / "crash_tbl")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "k int, v string"
-    ).write.parquet(table)
-    os.rename(table, table + "__upsert_old")  # the mid-swap crash state
-
-    sink = streaming_upsert_sink(table, "k")
-    sink(spark.createDataFrame([(3, "c")], "k int, v string"), 7)
-    got = dict((r.k, r.v) for r in spark.read.parquet(table).collect())
-    assert got == {1: "a", 2: "b", 3: "c"}  # history survived the crash
-
-
 def test_upsert_sink_latest_wins_with_ts(spark, tmp_path):
     table = str(tmp_path / "ts_tbl")
-    sink = streaming_upsert_sink(table, "k", ts_col="ts")
+    sink = streaming_manifest_upsert_sink(table, "k", ts_col="ts")
     batch = spark.createDataFrame(
         [(1, "old", 10), (1, "new", 20), (2, "x", 5)],
         "k int, v string, ts long",
     )
     sink(batch, 0)
-    got = dict((r.k, r.v) for r in spark.read.parquet(table).collect())
-    assert got == {1: "new", 2: "x"}
+    got = [(r.k, r.v) for r in manifest_read(spark, table).collect()]
+    assert sorted(got) == [(1, "new"), (2, "x")]
+
+
+def test_upsert_sink_stores_duplicate_batch_key_once(spark, tmp_path):
+    """Two rows for one key in a single batch, no ``ts_col``: the key is
+    stored once (which row wins is unspecified), on the first batch and on
+    a later merge alike."""
+    table = str(tmp_path / "dup_tbl")
+    sink = streaming_manifest_upsert_sink(table, "k")
+    batch = spark.createDataFrame(
+        [(1, "old"), (1, "new"), (2, "x")], "k int, v string"
+    )
+    sink(batch, 0)
+    sink(batch, 1)
+    got = [r.k for r in manifest_read(spark, table).collect()]
+    assert sorted(got) == [1, 2]
 
 
 def test_upsert_partitioned_touches_only_updated_partitions(spark, tmp_path):

@@ -19,7 +19,10 @@ It runs, in order, refusing to write ANY artifact on the first red:
    files are the artifacts this tool guards.
 4. the two plan-guard pytest modules (``tests/test_plans.py``,
    ``tests/test_registry_contract.py``), then the bronze router tests of
-   both tiers, crash-restart and idempotent replay included
+   both tiers, crash-restart and idempotent replay included, then both
+   tiers of the manifest-table, maintenance and incdedup modules
+   (incremental join equals recompute; the incdedup probe pinned to its
+   build generation)
 5. the full oracle run at sf0.1 → ``CHECK_SF01_r{N}.json``. NOT optional:
    the round-12 judge proved this scale is a distinct witness —
    `gains_chart_stopword` was green at sf0.01 AND synthetic sf≈1 yet
@@ -132,6 +135,10 @@ def main() -> int:
         [sys.executable, "-m", "pytest", "tests/test_streaming.py",
          "tests/test_table_catalog.py", "-x", "-q", "-m", "slow or not slow",
          "-k", "router or route_batch or bronze"])
+    run("manifest table, maintenance and incdedup pytest, both tiers",
+        [sys.executable, "-m", "pytest", "tests/test_manifest_table.py",
+         "tests/test_maintenance.py", "tests/test_incdedup.py", "-x", "-q",
+         "-m", "slow or not slow"])
 
     if "--skip-shuffles" not in sys.argv:
         import glob as _glob
