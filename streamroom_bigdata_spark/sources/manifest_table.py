@@ -255,11 +255,13 @@ def manifest_upsert(
     key: str,
     evolve_schema: bool = False,
 ) -> int:
-    """Keyed merge committed as one new generation: replaced keys dropped
-    via anti-join, updates appended, staged to a fresh data dir, then one
-    atomic manifest rename publishes it. Readers either see the previous
-    generation or the merged one — never a gap, never a mix. Returns the
-    new generation (0 when creating the table).
+    """Keyed merge committed as one new generation: ``updates`` is
+    deduplicated on ``key`` (an arbitrary row wins per key, so no key is
+    ever stored twice), replaced keys dropped via anti-join, updates
+    appended, staged to a fresh data dir, then one atomic manifest rename
+    publishes it. Readers either see the previous generation or the merged
+    one — never a gap, never a mix. Returns the new generation (0 when
+    creating the table).
 
     Schema policy: by default an updates frame must not ADD columns (a
     typo'd column name would otherwise silently widen the table — the
@@ -267,6 +269,7 @@ def manifest_upsert(
     with ``evolve_schema=True``, a new column is null-filled on the other
     side, which is exactly parquet-compatible schema evolution (old data
     files simply lack the column)."""
+    updates = updates.dropDuplicates([key])
     read_gen = manifest_generation(spark, table_dir)
     if read_gen is None:
         return _stage_and_commit(spark, table_dir, updates, None)
@@ -524,24 +527,21 @@ def streaming_manifest_upsert_sink(
     table_dir: str, key: str, ts_col: str | None = None
 ):
     """foreachBatch sink applying each micro-batch as a manifest-committed
-    upsert — the CDC-consumer pattern. Each batch is first deduplicated on
-    ``key``, so no key is ever stored twice: with ``ts_col`` the row with
-    the highest ``ts_col`` wins per key, without it an arbitrary one
-    (dropDuplicates). A batch replay after a crash re-merges idempotently
-    (same keys replace themselves), and readers never observe a partial
-    batch."""
+    upsert — the CDC-consumer pattern. ``manifest_upsert`` stores each key
+    once; with ``ts_col`` the row with the highest ``ts_col`` wins per key,
+    without it an arbitrary one. A batch replay after a crash re-merges
+    idempotently (same keys replace themselves), and readers never observe
+    a partial batch."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if ts_col is None:
-            deduped = batch_df.dropDuplicates([key])
-        else:
+        if ts_col is not None:
             w = Window.partitionBy(key).orderBy(F.desc(ts_col))
-            deduped = (
+            batch_df = (
                 batch_df.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        manifest_upsert(batch_df.sparkSession, table_dir, deduped, key)
+        manifest_upsert(batch_df.sparkSession, table_dir, batch_df, key)
 
     return apply
 

@@ -13,21 +13,21 @@ which is what makes the downstream writer idempotent per bin).
 The assignment rule is the batch planner's: a document's bin is
 ``floor(chars_before_it / target)`` — bins overflow by at most one
 document rather than splitting documents. Within a micro-batch documents
-are ordered by doc_id; across micro-batches the scan runs in arrival
-order — the inherent contract of incremental packing (a bin, once fed,
-cannot be retroactively re-packed by a late doc). When arrival order IS
-doc_id order, the assignments equal the batch planner's lang-global form
-(agreement test in tests/test_streaming.py)."""
+are ordered by doc_id: the keyed-state fold (``stateful._fold_update``)
+hands the packer a language's whole micro-batch as one frame, so the order
+holds however many Arrow chunks Spark split it into. Across micro-batches
+the scan runs in arrival order — the inherent contract of incremental
+packing (a bin, once fed, cannot be retroactively re-packed by a late
+doc). When arrival order IS doc_id order, the assignments equal the batch
+planner's lang-global form (agreement tests in tests/test_streaming.py)."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.layout import COMPACT_TARGET_CHARS
+from .stateful import DAY_MS, _fold_update, _keyed_fold
 
 PACK_OUT_SCHEMA = (
     "lang string, doc_id long, bin_id long, bin_fill_chars long"
@@ -52,29 +52,16 @@ def pack_scan(rows, cum: int = 0, target: int = COMPACT_TARGET_CHARS):
     return out, cum
 
 
-def _update_pack(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
-    cum = state.get[0] if state.exists else 0
-    assignments = []
-    for pdf in pdfs:
-        ordered = pdf.sort_values("doc_id")
-        batch, cum = pack_scan(
-            zip(ordered["doc_id"].tolist(), ordered["n_chars"].tolist()), cum
-        )
-        assignments.extend(batch)
-    state.update((int(cum),))
-    state.setTimeoutDuration(24 * 3600 * 1000)  # idle languages expire
-    if assignments:
-        yield pd.DataFrame(
-            [(key[0], *a) for a in assignments],
-            columns=["lang", "doc_id", "bin_id", "bin_fill_chars"],
-        )
+def _pack_fold(pdf: pd.DataFrame, state):
+    ordered = pdf.sort_values("doc_id")
+    assignments, cum = pack_scan(
+        zip(ordered["doc_id"].tolist(), ordered["n_chars"].tolist()), state[0]
+    )
+    return assignments, (int(cum),)
+
+
+# idle languages expire in a day
+_update_pack = _fold_update(_pack_fold, (0,), PACK_OUT_SCHEMA, DAY_MS)
 
 
 def pack_documents_stateful(docs: DataFrame) -> DataFrame:
@@ -82,10 +69,6 @@ def pack_documents_stateful(docs: DataFrame) -> DataFrame:
     each arriving document gets its output-chunk assignment immediately;
     state is one running total per language. Update mode, but rows are
     append-semantic (each doc_id emitted exactly once, never revised)."""
-    return docs.groupBy("lang").applyInPandasWithState(
-        _update_pack,
-        outputStructType=PACK_OUT_SCHEMA,
-        stateStructType=PACK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_fold(
+        docs, "lang", _update_pack, PACK_OUT_SCHEMA, PACK_STATE_SCHEMA
     )

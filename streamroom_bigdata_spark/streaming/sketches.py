@@ -23,12 +23,11 @@ MG decrements, preserving the invariant
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import HOUR_MS, _fold_update, _keyed_fold
 
 #: counters kept per shard (the k in the N/k error bound) and shard count.
 MG_CAPACITY = 64
@@ -60,33 +59,17 @@ def mg_update(d: dict[str, int], tok: str, c: int, cap: int) -> int:
     return dec_total
 
 
-def _update_shard(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
-    if state.exists:
-        toks, counts, dec = state.get
-        d = dict(zip(toks, counts))
-        dec = int(dec)
-    else:
-        d, dec = {}, 0
-    for pdf in pdfs:
-        for tok, c in pdf["tok"].value_counts().items():
-            dec += mg_update(d, str(tok), int(c), MG_CAPACITY)
-    state.update((list(d.keys()), [int(v) for v in d.values()], dec))
-    state.setTimeoutDuration(3600 * 1000)
-    yield pd.DataFrame(
-        {
-            "shard": [key[0]] * len(d),
-            "tok": list(d.keys()),
-            "est": [int(v) for v in d.values()],
-            "dec": [dec] * len(d),
-        }
-    )
+def _shard_fold(pdf: pd.DataFrame, state):
+    toks, counts, dec = state
+    d = dict(zip(toks, counts))
+    dec = int(dec)
+    for tok, c in pdf["tok"].value_counts().items():
+        dec += mg_update(d, str(tok), int(c), MG_CAPACITY)
+    est = [int(v) for v in d.values()]
+    return [(t, e, dec) for t, e in zip(d, est)], (list(d), est, dec)
+
+
+_update_shard = _fold_update(_shard_fold, ([], [], 0), MG_OUTPUT_SCHEMA, HOUR_MS)
 
 
 def streaming_heavy_hitters(tokens: DataFrame) -> DataFrame:
@@ -98,10 +81,6 @@ def streaming_heavy_hitters(tokens: DataFrame) -> DataFrame:
     sharded = tokens.withColumn(
         "shard", F.pmod(F.hash("tok"), F.lit(MG_SHARDS)).cast("int")
     )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        _update_shard,
-        outputStructType=MG_OUTPUT_SCHEMA,
-        stateStructType=MG_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_fold(
+        sharded, "shard", _update_shard, MG_OUTPUT_SCHEMA, MG_STATE_SCHEMA
     )

@@ -1,19 +1,34 @@
 """Custom stateful streaming (SURVEY.md §2.9 T10).
 
 The reference recomputes per-room booking counts in a separate batch job
-(processing.scala:84-86). Here the count is maintained incrementally as the
-stream runs:
+(processing.scala:84-86). Here per-key state is kept live in the stream:
 
 - ``running_counts``: the built-in path — streaming ``groupBy().agg()`` in
   update mode. Spark keeps per-key partial aggregates in the state store;
   each micro-batch emits only changed keys. Right answer for pure
   aggregates at any scale.
-- ``running_stats_stateful``: the arbitrary-state path —
-  ``applyInPandasWithState`` with an explicit per-key (count, sum) state
-  tuple and a processing-time timeout that expires idle keys, so state
-  can't grow without bound on a high-cardinality key space. Use this shape
-  when the per-key logic is genuinely not an aggregate (sessionization with
-  side effects, model state, alert latches).
+- the keyed-state fold: every operator whose per-key logic is not an
+  aggregate is a pure ``fold(pdf, state) -> (rows, state)`` run by ONE
+  update function (:func:`_fold_update`) through ONE
+  ``applyInPandasWithState`` call (:func:`_keyed_fold`, update mode,
+  processing-time timeout). The update drops a timed-out key's state
+  without emitting, otherwise folds the key's whole micro-batch once,
+  stores the state, re-arms the idle timeout and emits ``(key, *row)``.
+  Running stats, the funnel, the alert latch, CUSUM and Holt live here;
+  the bin packer (``packer.py``) and the Misra-Gries shards
+  (``sketches.py``) use the same pair.
+- ``sessionize_stateful`` keeps its own update, because its event-time
+  timeout emits the open session on expiry.
+
+Ordering contract: Spark hands a key's micro-batch to the update in Arrow
+chunks of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows. The fold
+always sees the chunks concatenated, so an order-sensitive fold orders a
+key's rows ONCE per micro-batch, whatever the chunk size; results do not
+depend on that conf. The price is one key's micro-batch in pandas at once,
+which ordering rows that arrive in different chunks needs anyway. Across
+micro-batches a fold runs in arrival order. Because the idle timeout runs
+on processing time, Spark follows every micro-batch with a no-data batch,
+so an ``availableNow`` query over a fold never stops by itself.
 """
 
 from __future__ import annotations
@@ -23,10 +38,62 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 STATS_SCHEMA = "user_id long, n_events long, sum_value double"
 STATE_SCHEMA = "n long, s double"
+
+HOUR_MS = 3600 * 1000
+DAY_MS = 24 * HOUR_MS
+
+
+def _columns(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(",")]
+
+
+def _fold_update(fold, init_state, out_schema: str, timeout_ms: int):
+    """applyInPandasWithState update function for a pure per-key
+    ``fold(pdf, state) -> (rows, state)``. A timed-out key's state is
+    removed without re-arming the timeout or emitting, so idle keys
+    cannot live (and emit phantom updates) forever. Otherwise the key's
+    chunks are folded as ONE frame, the state is stored, the idle timeout
+    re-armed, and each row is emitted as ``(key, *row)``."""
+    columns = _columns(out_schema)
+
+    def update(
+        key: tuple,
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        chunks = list(pdfs)
+        if not chunks:
+            return
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        rows, new_state = fold(pdf, tuple(state.get) if state.exists else init_state)
+        state.update(new_state)
+        state.setTimeoutDuration(timeout_ms)
+        if rows:
+            yield pd.DataFrame([(key[0], *r) for r in rows], columns=columns)
+
+    return update
+
+
+def _keyed_fold(
+    df: DataFrame, key: str, update, out_schema: str, state_schema: str
+) -> DataFrame:
+    """Run an update built by :func:`_fold_update` per ``key`` in update
+    mode with a processing-time idle timeout."""
+    return df.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
 
 
 def running_counts(events: DataFrame) -> DataFrame:
@@ -37,39 +104,21 @@ def running_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def _update_stats(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        # timeout invocation: no data. Drop the idle key's state WITHOUT
-        # re-arming the timeout or emitting a row — otherwise idle keys
-        # would live (and emit phantom updates) forever, unbounded state.
-        state.remove()
-        return
-    (n, s) = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        s += float(pdf["value"].sum())
-    state.update((n, s))
-    # idle keys expire after an hour of no traffic — bounded state
-    state.setTimeoutDuration(3600 * 1000)
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "sum_value": [round(s, 6)]}
-    )
+def _stats_fold(pdf: pd.DataFrame, state):
+    n, s = state
+    n += len(pdf)
+    s += float(pdf["value"].sum())
+    return [(n, round(s, 6))], (n, s)
+
+
+# idle keys expire after an hour of no traffic — bounded state
+_update_stats = _fold_update(_stats_fold, (0, 0.0), STATS_SCHEMA, HOUR_MS)
 
 
 def running_stats_stateful(events: DataFrame) -> DataFrame:
     """Arbitrary-state per-key running stats via ``applyInPandasWithState``.
     Emits the updated (count, sum) for every key seen in the micro-batch."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_stats,
-        outputStructType=STATS_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _keyed_fold(events, "user_id", _update_stats, STATS_SCHEMA, STATE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -79,55 +128,43 @@ def running_stats_stateful(events: DataFrame) -> DataFrame:
 # tuple. Requires the RocksDB state store provider.
 # ---------------------------------------------------------------------------
 
-try:  # Spark >= 4.0
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    class RunningStatsProcessor(StatefulProcessor):
-        """Per-key (count, sum) with a named ValueState and a TTL that
-        expires idle keys — the declarative replacement for the manual
-        timeout branch in :func:`_update_stats`. State layout, emissions,
-        and TTL semantics match the applyInPandasWithState twin, which the
-        agreement test asserts batch by batch."""
+class RunningStatsProcessor(StatefulProcessor):
+    """Per-key (count, sum) with a named ValueState and a TTL that
+    expires idle keys — the declarative replacement for the timeout
+    branch of :func:`_fold_update`. It runs the same ``_stats_fold``, and
+    the agreement test asserts its emissions match the
+    applyInPandasWithState twin batch by batch."""
 
-        STATE_TTL_MS = 3600 * 1000
+    STATE_TTL_MS = HOUR_MS
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stats = handle.getValueState(
-                "stats", STATE_SCHEMA, ttlDurationMs=self.STATE_TTL_MS
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, s = self._stats.get() if self._stats.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._stats.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [round(s, 6)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    def running_stats_tws(events: DataFrame) -> DataFrame:
-        """T10 on the Spark 4 ``transformWithStateInPandas`` API. Needs
-        ``spark.sql.streaming.stateStore.providerClass`` set to the RocksDB
-        provider (transformWithState's storage backend)."""
-        return events.groupBy("user_id").transformWithStateInPandas(
-            RunningStatsProcessor(),
-            outputStructType=STATS_SCHEMA,
-            outputMode="update",
-            timeMode="none",
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._stats = handle.getValueState(
+            "stats", STATE_SCHEMA, ttlDurationMs=self.STATE_TTL_MS
         )
 
-except ImportError:  # pragma: no cover - pre-4.0 fallback documented
-    RunningStatsProcessor = None
-
-    def running_stats_tws(events: DataFrame) -> DataFrame:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0; use "
-            "running_stats_stateful (applyInPandasWithState) instead"
+    def handleInputRows(self, key, rows, timer_values):
+        cur = self._stats.get() if self._stats.exists() else (0, 0.0)
+        out, cur = _stats_fold(pd.concat(list(rows), ignore_index=True), cur)
+        self._stats.update(cur)
+        yield pd.DataFrame(
+            [(key[0], *r) for r in out], columns=_columns(STATS_SCHEMA)
         )
+
+    def close(self) -> None:
+        pass
+
+
+def running_stats_tws(events: DataFrame) -> DataFrame:
+    """T10 on the Spark 4 ``transformWithStateInPandas`` API. Needs
+    ``spark.sql.streaming.stateStore.providerClass`` set to the RocksDB
+    provider (transformWithState's storage backend)."""
+    return events.groupBy("user_id").transformWithStateInPandas(
+        RunningStatsProcessor(),
+        outputStructType=STATS_SCHEMA,
+        outputMode="update",
+        timeMode="none",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -243,29 +280,23 @@ def funnel_depth(ts: tuple[int, int, int, int]) -> int:
     return 4
 
 
-def _update_funnel(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
-    ts = list(state.get) if state.exists else [-1, -1, -1, -1]
-    for pdf in pdfs:
-        ms = (pdf["ts"].astype("datetime64[ms]").astype("int64")).tolist()
-        for stage, m in zip(pdf["event_type"].tolist(), ms):
-            try:
-                i = _FUNNEL_STAGES.index(stage)
-            except ValueError:
-                continue  # non-funnel event types pass through
-            if ts[i] < 0 or m < ts[i]:
-                ts[i] = m
-    state.update(tuple(ts))
-    state.setTimeoutDuration(24 * 3600 * 1000)  # idle users expire in a day
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "depth": [funnel_depth(tuple(ts))]}
-    )
+def _funnel_fold(pdf: pd.DataFrame, state):
+    ts = list(state)
+    ms = pdf["ts"].astype("datetime64[ms]").astype("int64").tolist()
+    for stage, m in zip(pdf["event_type"].tolist(), ms):
+        try:
+            i = _FUNNEL_STAGES.index(stage)
+        except ValueError:
+            continue  # non-funnel event types pass through
+        if ts[i] < 0 or m < ts[i]:
+            ts[i] = m
+    return [(funnel_depth(tuple(ts)),)], tuple(ts)
+
+
+# idle users expire in a day
+_update_funnel = _fold_update(
+    _funnel_fold, (-1, -1, -1, -1), FUNNEL_OUT_SCHEMA, DAY_MS
+)
 
 
 def funnel_stateful(events: DataFrame) -> DataFrame:
@@ -276,12 +307,8 @@ def funnel_stateful(events: DataFrame) -> DataFrame:
     mode). Late/out-of-order events are handled by taking the MIN per
     stage — arrival order cannot change the converged answer, matching
     the batch funnel_conversion exactly (agreement-tested)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_funnel,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_fold(
+        events, "user_id", _update_funnel, FUNNEL_OUT_SCHEMA, FUNNEL_STATE_SCHEMA
     )
 
 
@@ -298,32 +325,26 @@ ALERT_OUTPUT_SCHEMA = (
 ALERT_STATE_SCHEMA = "latched boolean, n_alerts long"
 
 
-def _update_latch(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
-    latched, n_alerts = state.get if state.exists else (False, 0)
+def _event_rows(pdf: pd.DataFrame):
+    """(event_id, value) pairs in deterministic event-time order."""
+    ordered = pdf.sort_values(["ts", "event_id"])
+    return zip(ordered["event_id"].tolist(), ordered["value"].astype(float).tolist())
+
+
+def _latch_fold(pdf: pd.DataFrame, state):
+    latched, n_alerts = state
     out = []
-    for pdf in pdfs:
-        # ordering within the batch: event time then id — deterministic
-        for row in pdf.sort_values(["ts", "event_id"]).itertuples():
-            v = float(row.value)
-            if not latched and v >= ALERT_HIGH:
-                latched = True
-                n_alerts += 1
-                out.append((key[0], int(row.event_id), v, n_alerts))
-            elif latched and v <= ALERT_LOW:
-                latched = False
-    state.update((latched, int(n_alerts)))
-    state.setTimeoutDuration(3600 * 1000)
-    if out:
-        yield pd.DataFrame(
-            out, columns=["user_id", "event_id", "alert_value", "n_alerts"]
-        )
+    for eid, v in _event_rows(pdf):
+        if not latched and v >= ALERT_HIGH:
+            latched = True
+            n_alerts += 1
+            out.append((int(eid), v, int(n_alerts)))
+        elif latched and v <= ALERT_LOW:
+            latched = False
+    return out, (latched, int(n_alerts))
+
+
+_update_latch = _fold_update(_latch_fold, (False, 0), ALERT_OUTPUT_SCHEMA, HOUR_MS)
 
 
 def alert_latch_stateful(events: DataFrame) -> DataFrame:
@@ -335,12 +356,8 @@ def alert_latch_stateful(events: DataFrame) -> DataFrame:
     the key's history); the state is two scalars per key, expired after
     an idle hour — bounded at any key cardinality. Emits only alert rows
     (update mode): output traffic scales with ALERTS, not events."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_latch,
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        stateStructType=ALERT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_fold(
+        events, "user_id", _update_latch, ALERT_OUTPUT_SCHEMA, ALERT_STATE_SCHEMA
     )
 
 
@@ -394,62 +411,33 @@ def cusum_scan(rows, state=(0.0, 0.0, 0, 0)):
     return alarms, (s_pos, s_neg, n_events, n_alarms)
 
 
-def _cusum_rows(pdf: pd.DataFrame):
-    """(event_id, value) pairs in deterministic event-time order."""
-    ordered = pdf.sort_values(["ts", "event_id"])
-    return zip(ordered["event_id"].tolist(), ordered["value"].astype(float).tolist())
+def _scan_fold(kernel):
+    """Fold for a pure per-key scan kernel ``(rows, state) -> (alarms,
+    state)``: the key's rows in event-time order through the kernel."""
+    return lambda pdf, state: kernel(_event_rows(pdf), state)
 
 
-def _scan_update_fn(kernel, init_state, columns):
-    """applyInPandasWithState update function for a pure per-key scan
-    kernel ``(rows, state) -> (alarms, state)`` — the state plumbing
-    (timeout expiry, cross-batch carry, 24h idle eviction, alarm frame
-    assembly) shared by the CUSUM and Holt monitoring twins."""
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        cur = tuple(state.get) if state.exists else init_state
-        alarms = []
-        for pdf in pdfs:
-            batch_alarms, cur = kernel(_cusum_rows(pdf), cur)
-            alarms.extend(batch_alarms)
-        state.update(cur)
-        state.setTimeoutDuration(24 * 3600 * 1000)  # idle keys expire in a day
-        if alarms:
-            yield pd.DataFrame(
-                [(key[0], *a) for a in alarms], columns=columns
-            )
-
-    return update
-
-
-def _scan_batch_fn(kernel, init_state, columns, schema):
+def _scan_batch_fn(kernel, init_state, schema):
     """applyInPandas batch twin for the same kernel: the full per-key
     history in event-time order through one scan — one shuffle on the
     key, used by the streaming-vs-batch agreement tests."""
+    fold = _scan_fold(kernel)
+    columns = _columns(schema)
 
     def batch(events: DataFrame) -> DataFrame:
         def scan(key, pdf):
-            alarms, _ = kernel(_cusum_rows(pdf), init_state)
-            return pd.DataFrame(
-                [(key[0], *a) for a in alarms], columns=columns
-            )
+            alarms, _ = fold(pdf, init_state)
+            return pd.DataFrame([(key[0], *a) for a in alarms], columns=columns)
 
         return events.groupBy("user_id").applyInPandas(scan, schema)
 
     return batch
 
 
-_CUSUM_COLS = [
-    "user_id", "event_id", "direction", "statistic", "n_events", "n_alarms",
-]
-_update_cusum = _scan_update_fn(cusum_scan, (0.0, 0.0, 0, 0), _CUSUM_COLS)
+# idle keys expire in a day
+_update_cusum = _fold_update(
+    _scan_fold(cusum_scan), (0.0, 0.0, 0, 0), CUSUM_OUT_SCHEMA, DAY_MS
+)
 
 
 def cusum_alarm_stateful(events: DataFrame) -> DataFrame:
@@ -466,12 +454,8 @@ def cusum_alarm_stateful(events: DataFrame) -> DataFrame:
     a micro-batch; across micro-batches the scan runs in arrival order —
     the inherent contract of sequential detection (an alarm cannot be
     un-raised by a late arrival)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_cusum,
-        outputStructType=CUSUM_OUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_fold(
+        events, "user_id", _update_cusum, CUSUM_OUT_SCHEMA, CUSUM_STATE_SCHEMA
     )
 
 
@@ -481,18 +465,7 @@ def cusum_alarm_batch(events: DataFrame) -> DataFrame:
     key, per-key work linear and parallel across keys. Used by the
     agreement test: streaming the same data in event-time-ordered
     micro-batches must emit exactly these rows."""
-
-    def scan(key, pdf):
-        alarms, _ = cusum_scan(_cusum_rows(pdf))
-        return pd.DataFrame(
-            [(key[0], *a) for a in alarms],
-            columns=[
-                "user_id", "event_id", "direction", "statistic",
-                "n_events", "n_alarms",
-            ],
-        )
-
-    return events.groupBy("user_id").applyInPandas(scan, CUSUM_OUT_SCHEMA)
+    return _scan_batch_fn(cusum_scan, (0.0, 0.0, 0, 0), CUSUM_OUT_SCHEMA)(events)
 
 
 # ---------------------------------------------------------------------------
@@ -548,11 +521,9 @@ def holt_scan(rows, state=(0.0, 0.0, 0, 0)):
     return alarms, (l, b, n_events, n_alarms)
 
 
-_HOLT_COLS = [
-    "user_id", "event_id", "forecast", "value",
-    "abs_err", "n_events", "n_alarms",
-]
-_update_holt = _scan_update_fn(holt_scan, (0.0, 0.0, 0, 0), _HOLT_COLS)
+_update_holt = _fold_update(
+    _scan_fold(holt_scan), (0.0, 0.0, 0, 0), HOLT_OUT_SCHEMA, DAY_MS
+)
 
 
 def holt_drift_stateful(events: DataFrame) -> DataFrame:
@@ -569,12 +540,8 @@ def holt_drift_stateful(events: DataFrame) -> DataFrame:
     ordered by event time within a micro-batch; across micro-batches the
     recurrence runs in arrival order — the sequential-detection
     contract shared with the CUSUM twin."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_holt,
-        outputStructType=HOLT_OUT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_fold(
+        events, "user_id", _update_holt, HOLT_OUT_SCHEMA, HOLT_STATE_SCHEMA
     )
 
 
@@ -582,6 +549,4 @@ def holt_drift_batch(events: DataFrame) -> DataFrame:
     """Batch twin: the SAME ``holt_scan`` kernel over each key's full
     history in event-time order via ``applyInPandas`` — one shuffle on
     the key. Used by the agreement test."""
-    return _scan_batch_fn(
-        holt_scan, (0.0, 0.0, 0, 0), _HOLT_COLS, HOLT_OUT_SCHEMA
-    )(events)
+    return _scan_batch_fn(holt_scan, (0.0, 0.0, 0, 0), HOLT_OUT_SCHEMA)(events)

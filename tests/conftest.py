@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import time
 from urllib.parse import urlparse
 
 import pytest
@@ -79,6 +80,32 @@ SLOW_TESTS = {
     "tests/test_wave3.py::test_rrf_fuses_both_modalities",
     "tests/test_wave3.py::test_sampled_quantiles_error_bound",
 }
+
+
+def run_fold_to_memory(df, name: str) -> None:
+    """Run a keyed-state fold query (``streaming.stateful._keyed_fold``)
+    into the memory table ``name`` until its input is drained, then stop
+    it. The folds arm a processing-time timeout, so Spark follows every
+    micro-batch with a no-data batch and an availableNow query never
+    terminates on its own; with availableNow a no-data batch runs only
+    once no input is left. A failed query raises here."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    deadline = time.monotonic() + 120
+    try:
+        while not q.awaitTermination(0.2):
+            last = q.lastProgress
+            if last is not None and last["numInputRows"] == 0:
+                break
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"{name}: input not drained in 120 s")
+    finally:
+        q.stop()
 
 
 def pytest_collection_modifyitems(config, items):

@@ -37,6 +37,21 @@ def test_upsert_replaces_and_appends(spark, table):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
+def test_upsert_stores_duplicate_update_key_once(spark, tmp_path):
+    """Two rows for one key in ``updates`` commit ONE row for that key
+    (which row wins is unspecified) — without going through the CDC
+    sink."""
+    d = str(tmp_path / "dup")
+    mt.manifest_write(spark, d, _mk(spark, [(1, "a")]))
+    mt.manifest_upsert(
+        spark, d, _mk(spark, [(1, "old"), (1, "new"), (2, "x")]), "k"
+    )
+    got = sorted(tuple(r) for r in mt.manifest_read(spark, d).collect())
+    assert [k for k, _ in got] == [1, 2]
+    assert dict(got)[1] in ("old", "new")
+    assert dict(got)[2] == "x"
+
+
 def test_crash_between_stage_and_commit_is_invisible(spark, table):
     """Kill the writer after the data write, before the manifest rename:
     readers must keep seeing generation 0, and a later upsert must succeed

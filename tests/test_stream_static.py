@@ -7,6 +7,7 @@ import json
 import os
 import time
 
+from conftest import run_fold_to_memory
 from pyspark.sql import functions as F
 
 from streamroom_bigdata_spark.streaming.queries import stream_static_enrich
@@ -98,15 +99,7 @@ def test_alert_latch_hysteresis(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    q = (
-        stateful.alert_latch_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("alert_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    run_fold_to_memory(stateful.alert_latch_stateful(stream), "alert_sink")
     rows = sorted(
         spark.sql("select * from alert_sink").collect(),
         key=lambda r: r.event_id,

@@ -11,6 +11,7 @@ import os
 
 import pandas as pd
 import pytest
+from conftest import run_fold_to_memory
 from pyspark.sql import functions as F
 
 from streamroom_bigdata_spark.schemas import ENTITIES, WIRE_SCHEMA, bronze_schema
@@ -438,7 +439,7 @@ def test_apply_in_pandas_with_state(spark, tmp_path):
         {"event_id": 3, "ts": "2024-01-01T00:06:00", "user_id": 8, "value": 1.0},
     ]
     stream = _stream_events(spark, tmp_path, [b1, b2])
-    _run_to_memory(stateful.running_stats_stateful(stream), "state_sink", "update")
+    run_fold_to_memory(stateful.running_stats_stateful(stream), "state_sink")
     rows = spark.sql("select * from state_sink").collect()
     final = {}
     for r in rows:  # update mode appends one row per key per batch; keep last
@@ -1135,7 +1136,7 @@ def test_stateful_funnel_agrees_with_batch_semantics(spark, tmp_path):
         pd.DataFrame(rows).to_json(p, orient="records", lines=True, date_format="iso")
         os.utime(p, (base + i, base + i))
     stream = stream_file_source(spark, str(src), ddl, fmt="json", maxFilesPerTrigger=1)
-    _run_to_memory(stateful.funnel_stateful(stream), "funnel_sink", "update")
+    run_fold_to_memory(stateful.funnel_stateful(stream), "funnel_sink")
     final = {}
     for r in spark.sql("select * from funnel_sink").collect():
         final[r.user_id] = r.depth  # update mode: keep the LAST emission
@@ -1175,7 +1176,7 @@ def test_cusum_alarm_crosses_threshold_across_micro_batches(spark, tmp_path):
         pd.DataFrame(rows).to_json(p, orient="records", lines=True, date_format="iso")
         os.utime(p, (base + i, base + i))
     stream = stream_file_source(spark, str(src), ddl, fmt="json", maxFilesPerTrigger=1)
-    _run_to_memory(stateful.cusum_alarm_stateful(stream), "cusum_sink", "update")
+    run_fold_to_memory(stateful.cusum_alarm_stateful(stream), "cusum_sink")
     got = {
         (r.user_id, r.event_id): r
     for r in spark.sql("select * from cusum_sink").collect()}
@@ -1218,7 +1219,7 @@ def test_cusum_streaming_agrees_with_batch_twin(spark, tmp_path):
         pd.DataFrame(chunk).to_json(p, orient="records", lines=True, date_format="iso")
         os.utime(p, (base + i, base + i))
     stream = stream_file_source(spark, str(src), ddl, fmt="json", maxFilesPerTrigger=1)
-    _run_to_memory(stateful.cusum_alarm_stateful(stream), "cusum_agree_sink", "update")
+    run_fold_to_memory(stateful.cusum_alarm_stateful(stream), "cusum_agree_sink")
     streamed = sorted(
         tuple(r) for r in spark.sql("select * from cusum_agree_sink").collect()
     )
@@ -1582,9 +1583,7 @@ def test_pack_documents_carries_fill_across_micro_batches(spark, tmp_path):
     stream = stream_file_source(
         spark, str(src), ddl, fmt="json", maxFilesPerTrigger=1
     )
-    _run_to_memory(
-        packer.pack_documents_stateful(stream), "pack_sink", "update"
-    )
+    run_fold_to_memory(packer.pack_documents_stateful(stream), "pack_sink")
     got = {
         (r.lang, r.doc_id): (r.bin_id, r.bin_fill_chars)
         for r in spark.sql("select * from pack_sink").collect()
@@ -1623,8 +1622,8 @@ def test_pack_streaming_agrees_with_batch_planner(spark, tmp_path):
         spark, str(src), "doc_id long, lang string, n_chars long",
         fmt="json", maxFilesPerTrigger=1,
     )
-    _run_to_memory(
-        packer.pack_documents_stateful(stream), "pack_agree_sink", "update"
+    run_fold_to_memory(
+        packer.pack_documents_stateful(stream), "pack_agree_sink"
     )
     streamed = {
         r.doc_id: r.bin_id
@@ -1663,7 +1662,7 @@ def test_holt_drift_alarm_crosses_batches_and_reanchors(spark, tmp_path):
         pd.DataFrame(rows).to_json(p, orient="records", lines=True, date_format="iso")
         os.utime(p, (base + i, base + i))
     stream = stream_file_source(spark, str(src), ddl, fmt="json", maxFilesPerTrigger=1)
-    _run_to_memory(stateful.holt_drift_stateful(stream), "holt_sink", "update")
+    run_fold_to_memory(stateful.holt_drift_stateful(stream), "holt_sink")
     got = [tuple(r) for r in spark.sql("select * from holt_sink").collect()]
     # driver-side replay of the same kernel fixes the expected rows
     events = [(r["event_id"], r["value"]) for r in b1 + b2]
@@ -1699,7 +1698,7 @@ def test_holt_drift_streaming_agrees_with_batch_twin(spark, tmp_path):
         pd.DataFrame(chunk).to_json(p, orient="records", lines=True, date_format="iso")
         os.utime(p, (base + i, base + i))
     stream = stream_file_source(spark, str(src), ddl, fmt="json", maxFilesPerTrigger=1)
-    _run_to_memory(stateful.holt_drift_stateful(stream), "holt_agree_sink", "update")
+    run_fold_to_memory(stateful.holt_drift_stateful(stream), "holt_agree_sink")
     streamed = sorted(
         tuple(r) for r in spark.sql("select * from holt_agree_sink").collect()
     )
@@ -1710,6 +1709,72 @@ def test_holt_drift_streaming_agrees_with_batch_twin(spark, tmp_path):
     assert streamed == batch
     assert [r[0] for r in batch if r[0] == 2] == []  # steady key never alarms
     assert len([r for r in batch if r[0] == 3]) >= 3  # saw re-alarms after reset
+
+
+@pytest.mark.parametrize("case", ["cusum", "latch", "pack"])
+def test_stateful_fold_orders_whole_micro_batch_at_any_chunk_size(
+    spark, tmp_path, case
+):
+    """One micro-batch holds one key's rows in REVERSE order, and Spark
+    hands them to the update in Arrow chunks of 2 rows. An order-sensitive
+    fold must order the key's whole micro-batch, not each chunk, so the
+    result equals the batch rule whatever the chunk size."""
+    from streamroom_bigdata_spark.streaming import packer
+
+    sizes = [5_000, 9_000, 4_000, 16_000, 1_000, 20_000, 3_000]
+    if case == "pack":
+        ddl = "doc_id long, lang string, n_chars long"
+        rows = [
+            {"doc_id": i, "lang": "en", "n_chars": n}
+            for i, n in enumerate(sizes)
+        ]
+        build = packer.pack_documents_stateful
+    else:
+        ddl = "event_id long, ts timestamp, user_id long, event_type string, value double"
+        # cusum: S+ 3.5, 7.0, 10.5 > h alarms on the 3rd event; latch:
+        # 9 alerts, 3 resets, 9 alerts again
+        values = [9.0, 9.0, 9.0, 5.0, 5.0] if case == "cusum" else [9.0, 3.0, 9.0]
+        rows = [
+            {
+                "event_id": 100 + i, "ts": f"2024-01-01T0{i}:00:00",
+                "user_id": 1, "event_type": "metric", "value": v,
+            }
+            for i, v in enumerate(values)
+        ]
+        build = (
+            stateful.cusum_alarm_stateful if case == "cusum"
+            else stateful.alert_latch_stateful
+        )
+    src = tmp_path / "chunk_src"
+    src.mkdir()
+    pd.DataFrame(rows[::-1]).to_json(
+        src / "b0.json", orient="records", lines=True, date_format="iso"
+    )
+    stream = stream_file_source(spark, str(src), ddl, fmt="json", maxFilesPerTrigger=1)
+    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "2")
+    try:
+        run_fold_to_memory(build(stream), f"chunk_{case}_sink")
+    finally:
+        if prev is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, prev)
+    got = sorted(
+        tuple(r) for r in spark.sql(f"select * from chunk_{case}_sink").collect()
+    )
+    if case == "cusum":
+        static = spark.createDataFrame(pd.DataFrame(rows)).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        batch = sorted(tuple(r) for r in stateful.cusum_alarm_batch(static).collect())
+        assert got == batch == [(1, 102, "up", 10.5, 3, 1)]
+    elif case == "latch":
+        assert got == [(1, 100, 9.0, 1), (1, 102, 9.0, 2)]
+    else:
+        assigns, _ = packer.pack_scan(list(enumerate(sizes)))
+        assert got == [("en", *a) for a in assigns]
 
 
 def test_streaming_ohlc_matches_batch(spark, tmp_path):

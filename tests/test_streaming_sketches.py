@@ -8,6 +8,8 @@ import os
 import random
 import time
 
+from conftest import run_fold_to_memory
+
 from streamroom_bigdata_spark.streaming.sketches import (
     MG_CAPACITY,
     MG_SHARDS,
@@ -82,15 +84,7 @@ def test_streaming_heavy_hitters_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    q = (
-        streaming_heavy_hitters(stream)
-        .writeStream.format("memory")
-        .queryName("mg_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    run_fold_to_memory(streaming_heavy_hitters(stream), "mg_sink")
 
     # last emission per (shard, tok): per-shard dec is monotone
     # nondecreasing across batches, and for equal dec the count only

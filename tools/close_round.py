@@ -20,9 +20,10 @@ It runs, in order, refusing to write ANY artifact on the first red:
 4. the two plan-guard pytest modules (``tests/test_plans.py``,
    ``tests/test_registry_contract.py``), then the bronze router tests of
    both tiers, crash-restart and idempotent replay included, then both
-   tiers of the manifest-table, maintenance and incdedup modules
-   (incremental join equals recompute; the incdedup probe pinned to its
-   build generation)
+   tiers of the stateful streaming family (the streaming-vs-batch
+   agreement twins are slow-tier), then both tiers of the manifest-table,
+   maintenance and incdedup modules (incremental join equals recompute;
+   the incdedup probe pinned to its build generation)
 5. the full oracle run at sf0.1 → ``CHECK_SF01_r{N}.json``. NOT optional:
    the round-12 judge proved this scale is a distinct witness —
    `gains_chart_stopword` was green at sf0.01 AND synthetic sf≈1 yet
@@ -135,6 +136,15 @@ def main() -> int:
         [sys.executable, "-m", "pytest", "tests/test_streaming.py",
          "tests/test_table_catalog.py", "-x", "-q", "-m", "slow or not slow",
          "-k", "router or route_batch or bronze"])
+    run("stateful streaming pytest tests, both tiers",
+        [sys.executable, "-m", "pytest", "tests/test_streaming.py", "-x",
+         "-q", "-m", "slow or not slow",
+         "-k", "stateful or cusum or holt or pack or latch or psi or funnel "
+         "or sessioniz or apply_in_pandas or tws"])
+    run("stream-static and streaming sketch pytest modules, both tiers",
+        [sys.executable, "-m", "pytest", "tests/test_stream_static.py",
+         "tests/test_streaming_sketches.py", "-x", "-q",
+         "-m", "slow or not slow"])
     run("manifest table, maintenance and incdedup pytest, both tiers",
         [sys.executable, "-m", "pytest", "tests/test_manifest_table.py",
          "tests/test_maintenance.py", "tests/test_incdedup.py", "-x", "-q",
